@@ -1025,13 +1025,6 @@ from ganda_spark.operators.dedup import (  # noqa: E402
     simhash,
     with_shingles,
 )
-from ganda_spark.operators.multimodal import (  # noqa: E402
-    binary_meta,
-    decode_meta,
-    resize_meta,
-    sample_frames,
-    to_binary_table,
-)
 from ganda_spark.operators.similarity import (  # noqa: E402
     ann_topk,
     brute_force_topk,
@@ -2035,36 +2028,6 @@ FROM m
 """
 
 
-_GOPHER_COLS = (
-    "n_words", "mean_word_len_bp", "symbol_word_bp", "stop_hits",
-    "alpha_word_bp", "bullet_line_bp", "ellipsis_line_bp",
-    "dup_line_bp", "dup_line_char_bp", "keep_gopher",
-)
-
-
-def q_text_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-rule quality facets + gate (functions/quality.py): the
-    MassiveText §A.1.1 heuristics as one pure-Column projection — the
-    filter stage between extract/normalize and dedup that the reference
-    leaves to the Unix pipe (responses/responses.go:91-103)."""
-    from ganda_spark.functions.quality import gopher_quality
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return gopher_quality(docs).select(
-        F.col("doc_id").cast("long").alias("doc_id"), *_GOPHER_COLS
-    )
-
-
-def _sql_text_quality_gopher() -> str:
-    from ganda_spark.functions.quality import duck_gopher_sql
-
-    return f"""
-WITH g AS ({duck_gopher_sql()})
-SELECT CAST(doc_id AS BIGINT) AS doc_id, {", ".join(_GOPHER_COLS)}
-FROM g
-"""
-
-
 def q_corpus_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size-budgeted ORDERED shard export + manifest (operators/sampling.
     export_ordered_shards): global-key-order shard numbering via the
@@ -2094,100 +2057,6 @@ c AS (
   FROM s
 ),
 sh AS (SELECT doc_id, sz, CAST(prev // 16384 AS BIGINT) AS shard_id FROM c)
-SELECT shard_id,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(sz) AS BIGINT) AS total_bytes,
-       CAST(min(doc_id) AS BIGINT) AS min_key,
-       CAST(max(doc_id) AS BIGINT) AS max_key,
-       CAST(sum(CAST(('0x' || substr(md5(
-           CAST(doc_id AS VARCHAR) || ':' || CAST(sz AS VARCHAR)
-         ), 1, 12)) AS BIGINT)) AS BIGINT) AS content_fp
-FROM sh GROUP BY shard_id
-"""
-
-
-def q_corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r6 curation stages END-TO-END: normalize (projection) →
-    Gopher facet gate (projection; a relaxed profile suited to the
-    synthetic corpus — production uses GOPHER_THRESHOLDS) → exact dedup
-    on the NORMALIZED text (one hash shuffle + keeper semi-join) →
-    ordered shard export (two-level prefix sum) → release manifest.
-    The output is what a training run actually consumes: shard ids,
-    sizes, key ranges and content fingerprints of the released corpus."""
-    from ganda_spark.functions.normalize import normalize_text
-    from ganda_spark.functions.quality import gopher_quality
-    from ganda_spark.operators.dedup import exact_dup_groups
-    from ganda_spark.operators.sampling import (
-        export_ordered_shards,
-        shard_manifest,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    normed = normalize_text(docs).select("doc_id", "text_norm")
-    # persist ABOVE the gate (r7, guide §4.4's duplication class): a
-    # .where() on the derived facet columns is pushed below the
-    # projection, re-evaluating the normalize+Gopher regexp chains once
-    # per predicate (measured 28.9 s vs 5.9 s for the one-pass cache
-    # fill at 10×). The cache is the pushdown barrier: facets compute
-    # once, the gate is a trivial filter over the cache scan — and the
-    # cache still serves the keeper aggregate AND the kept semi-join
-    # (the original guide-§5 reason it was persisted at all).
-    scored = (
-        gopher_quality(normed, text_col="text_norm")
-        .select(
-            "doc_id", "text_norm",
-            "alpha_word_bp", "stop_hits", "n_words", "dup_line_bp",
-        )
-        .persist()
-    )
-    gated = scored.where(
-        (F.col("alpha_word_bp") >= 8000)
-        & (F.col("stop_hits") >= 1)
-        & (F.col("n_words") >= 20)
-        & (F.col("dup_line_bp") <= 3000)
-    ).select("doc_id", "text_norm")
-    keep = exact_dup_groups(gated, id_col="doc_id", text_col="text_norm").select(
-        F.col("keep_id").alias("doc_id")
-    )
-    # slim to (key, size) BEFORE the export: its input persist then holds
-    # 16 bytes/row instead of the corpus text (the 100 TB-relevant cut)
-    kept = gated.join(keep, "doc_id", "left_semi").select(
-        "doc_id", F.length("text_norm").cast("long").alias("norm_bytes")
-    )
-    sharded = export_ordered_shards(
-        kept, size_col="norm_bytes", shard_bytes=8_192, key_col="doc_id", buckets=8
-    )
-    return shard_manifest(sharded, size_col="norm_bytes")
-
-
-def _sql_corpus_release_pipeline() -> str:
-    from ganda_spark.functions.normalize import duck_normalize_sql
-    from ganda_spark.functions.quality import duck_gopher_sql
-
-    return f"""
-WITH normed AS (
-  SELECT doc_id, {duck_normalize_sql("text")} AS text_norm FROM documents
-),
-gated AS (
-  SELECT doc_id, text_norm
-  FROM ({duck_gopher_sql(source="normed", text_col="text_norm")}) g
-  WHERE alpha_word_bp >= 8000 AND stop_hits >= 1
-    AND n_words >= 20 AND dup_line_bp <= 3000
-),
-keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text_norm)),
-kept AS (
-  SELECT g.doc_id, CAST(length(g.text_norm) AS BIGINT) AS sz
-  FROM gated g JOIN keep k USING (doc_id)
-),
-c AS (
-  SELECT doc_id, sz,
-         coalesce(sum(sz) OVER (ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
-  FROM kept
-),
-sh AS (SELECT doc_id, sz, CAST(prev // 8192 AS BIGINT) AS shard_id FROM c)
 SELECT shard_id,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(sz) AS BIGINT) AS total_bytes,
@@ -2382,76 +2251,8 @@ FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id,
 """
 
 
-def q_text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/decontam): eval set = docs
-    with doc_id % 37 = 0, corpus = the rest; flag corpus docs sharing any
-    word 5-gram with the eval set (planted near-dups straddle the split).
-    Bench n-grams broadcast; corpus n-grams are a shuffle-free projection."""
-    from ganda_spark.operators.decontam import decontaminate
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
-        "doc_id", F.col("doc_id").cast("long")
-    )
-    bench = docs.filter("doc_id % 37 = 0")
-    corpus = docs.filter("doc_id % 37 != 0")
-    out = decontaminate(corpus, bench, n=5)
-    return out.select(
-        "doc_id", "n_doc_ngrams", "n_hit_ngrams", "hit_bp", "contaminated"
-    )
-
-
-_SQL_DECONTAM = """
-WITH d AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, string_split(text, ' ') AS w
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(list_slice(w, i, i + 4), ' ')
-                        for i in generate_series(1, len(w) - 4)]) AS ng
-  FROM d
-),
-bench AS (
-  SELECT DISTINCT unnest(ng) AS ngram FROM g WHERE doc_id % 37 = 0
-),
-corpus AS (SELECT * FROM g WHERE doc_id % 37 <> 0),
-hits AS (
-  SELECT c.doc_id, count(*) AS n_hit
-  FROM (SELECT doc_id, unnest(ng) AS ngram FROM corpus) c
-  JOIN bench USING (ngram)
-  GROUP BY c.doc_id
-)
-SELECT corpus.doc_id,
-  CAST(len(ng) AS BIGINT) AS n_doc_ngrams,
-  CAST(coalesce(n_hit, 0) AS BIGINT) AS n_hit_ngrams,
-  CAST(CASE WHEN len(ng) > 0 THEN coalesce(n_hit, 0) * 10000 // len(ng)
-       ELSE 0 END AS BIGINT) AS hit_bp,
-  coalesce(n_hit, 0) > 0 AS contaminated
-FROM corpus LEFT JOIN hits USING (doc_id)
-"""
-
-
 _MIX_WEIGHTS = {"src0": 4000, "src1": 3000, "src2": 2000, "src3": 1000}
 _MIX_BUDGET = 2000
-
-
-def q_text_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The too-big-to-broadcast decontamination path
-    (operators/decontam.decontaminate_bloom): bench n-grams folded into a
-    treeAggregate Bloom bitmap, doc n-grams prefiltered executor-side,
-    exact join only over the surviving sliver. Same oracle as
-    text_decontam — equal by construction."""
-    from ganda_spark.operators.decontam import decontaminate_bloom
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
-        "doc_id", F.col("doc_id").cast("long")
-    )
-    bench = docs.filter("doc_id % 37 = 0")
-    corpus = docs.filter("doc_id % 37 != 0")
-    out = decontaminate_bloom(corpus, bench, n=5)
-    return out.select(
-        "doc_id", "n_doc_ngrams", "n_hit_ngrams", "hit_bp", "contaminated"
-    )
 
 
 def q_mix_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3038,114 +2839,6 @@ FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
 """
 
 
-# --- multimodal ------------------------------------------------------------------
-
-
-def q_mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return binary_meta(to_binary_table(docs))
-
-
-_SQL_MM_META = """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
-            WHEN doc_id % 3 = 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       lower(hex(encode(substr(text, 1, 8)))) AS head_hex,
-       md5(text) AS content_md5
-FROM documents
-"""
-
-
-def q_mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow decode pass (mapInPandas) with the deterministic fake
-    decoder — proven against SQL reconstruction of the same function."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return decode_meta(to_binary_table(docs)).select(
-        "doc_id",
-        "n_bytes",
-        "content_md5",
-        "format",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-    )
-
-
-_SQL_MM_DECODE = """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS content_md5,
-       CASE WHEN doc_id % 3 = 0 THEN 'jpeg'
-            WHEN doc_id % 3 = 1 THEN 'wav' ELSE 'mp4' END AS format,
-       CAST(64 + CAST(('0x' || substr(md5(text), 1, 4)) AS BIGINT) % 1920
-            AS BIGINT) AS width,
-       CAST(64 + CAST(('0x' || substr(md5(text), 5, 4)) AS BIGINT) % 1080
-            AS BIGINT) AS height
-FROM documents
-"""
-
-
-def q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving fit into a 512×512 box over the Arrow resize pass
-    (mapInPandas); integer basis-point geometry so DuckDB reproduces it."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return resize_meta(to_binary_table(docs), max_w=512, max_h=512).select(
-        "doc_id",
-        F.col("src_w").cast("long").alias("src_w"),
-        F.col("src_h").cast("long").alias("src_h"),
-        F.col("out_w").cast("long").alias("out_w"),
-        F.col("out_h").cast("long").alias("out_h"),
-        "scale_bp",
-    )
-
-
-_SQL_MM_RESIZE = """
-WITH dims AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         64 + CAST(('0x' || substr(md5(text), 1, 4)) AS BIGINT) % 1920 AS w,
-         64 + CAST(('0x' || substr(md5(text), 5, 4)) AS BIGINT) % 1080 AS h
-  FROM documents
-),
-scaled AS (
-  SELECT doc_id, w, h,
-         least(10000, 512 * 10000 // w, 512 * 10000 // h) AS scale_bp
-  FROM dims
-)
-SELECT doc_id, CAST(w AS BIGINT) AS src_w, CAST(h AS BIGINT) AS src_h,
-       CAST(greatest(1, w * scale_bp // 10000) AS BIGINT) AS out_w,
-       CAST(greatest(1, h * scale_bp // 10000) AS BIGINT) AS out_h,
-       CAST(scale_bp AS BIGINT) AS scale_bp
-FROM scaled
-"""
-
-
-def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=4 evenly-spaced frame offsets per video row (hash-derived fake
-    duration) — the ffmpeg keyframe-pass batch shape, fan-out inside the
-    Arrow batch."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sample_frames(to_binary_table(docs), k=4).select(
-        "doc_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        "offset_ms",
-        "frame_ref",
-    )
-
-
-_SQL_MM_FRAMES = """
-WITH vids AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         1000 + CAST(('0x' || substr(md5(text), 9, 6)) AS BIGINT) % 600000
-           AS duration_ms
-  FROM documents WHERE doc_id % 3 = 2
-)
-SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-       CAST(i * duration_ms // 4 AS BIGINT) AS offset_ms,
-       concat(doc_id, '#t=', CAST(i * duration_ms // 4 AS VARCHAR)) AS frame_ref
-FROM vids, generate_series(0, 3) AS t(i)
-"""
-
-
 def q_mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL header-level media decode (VERDICT r3 #1): synthetic payloads
     carry spec-valid PNG IHDR / WAV RIFF headers (pure function of
@@ -3539,53 +3232,6 @@ SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
        CAST(round(sum(CAST(value AS DECIMAL(18,6))), 3) AS DOUBLE) AS sum_value
 FROM s GROUP BY user_id, session_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# exact latency quantiles via bounded-domain histogram (functions/stats.py:
-# the scale-safe exact-percentile form — the shuffle carries ≤ classes ×
-# |latency domain| rows, never the data)
-# ---------------------------------------------------------------------------
-
-
-def q_agg_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ganda_spark.functions.stats import histogram_quantiles
-
-    fetched = mock_fetch_plan(seed_frontier(spark, sf_dir), EngineConfig(retries=1))
-    cls = (
-        F.when(F.col("status") < 400, "ok")
-        .when(F.col("status") < 500, "warn")
-        .otherwise("retryable")
-    )
-    measures = fetched.select(cls.alias("status_class"), "latency_ms")
-    return histogram_quantiles(
-        measures,
-        "latency_ms",
-        ["status_class"],
-        {"p50": 5000, "p95": 9500, "p99": 9900},
-    )
-
-
-_SQL_LATENCY_QUANTILES = f"""
-WITH {_DUCK_FRONTIER}, {_fetched_cte(retries=1)},
-c AS (
-  SELECT CASE WHEN status < 400 THEN 'ok'
-              WHEN status < 500 THEN 'warn' ELSE 'retryable' END AS status_class,
-         latency_ms
-  FROM fetched
-),
-hist AS (SELECT status_class, latency_ms, count(*) AS cnt FROM c GROUP BY 1, 2),
-cum AS (
-  SELECT *, sum(cnt) OVER (PARTITION BY status_class ORDER BY latency_ms
-                           ROWS UNBOUNDED PRECEDING) AS cum,
-            sum(cnt) OVER (PARTITION BY status_class) AS n
-  FROM hist
-),
-p AS (SELECT * FROM (VALUES ('p50', 5000), ('p95', 9500), ('p99', 9900)) AS t(pct, bp))
-SELECT status_class, pct, CAST(n AS BIGINT) AS n, latency_ms AS value
-FROM cum CROSS JOIN p
-WHERE cum >= (n * bp + 9999) // 10000 AND cum - cnt < (n * bp + 9999) // 10000
 """
 
 
@@ -4151,134 +3797,6 @@ FROM sn LEFT JOIN dup p ON sn.vec_id = p.j
 """
 
 
-def q_mm_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic bag-of-chunks hash-projection embedding over raw
-    payload bytes (operators/media.embed_media, VERDICT r4 #3) — the
-    media-side sibling of text_embed, emitted in exact integer basis
-    points."""
-    from ganda_spark.operators.media import embed_media
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = embed_media(to_binary_table(docs))
-    return out.select(
-        "doc_id",
-        "media_type",
-        *[
-            F.element_at("media_embedding_bp", j + 1).alias(f"d{j}")
-            for j in range(8)
-        ],
-    )
-
-
-def _sql_mm_embed() -> str:
-    def dim(j: int) -> str:
-        s, byte = divmod(j, 6)
-        h = (
-            f"CAST(('0x' || substr(md5(concat('{s}:', "
-            f"substring(hp, (i - 1) * 128 + 1, 128))), 1, 12)) AS BIGINT)"
-        )
-        return (
-            f"CAST(list_sum([({h} >> {8 * byte}) & 255"
-            f" for i in generate_series(1, n)])"
-            f" * 10000 // n - 1275000 AS BIGINT) AS d{j}"
-        )
-
-    cols = ",\n       ".join(dim(j) for j in range(8))
-    return f"""
-SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
-            WHEN doc_id % 3 = 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
-       {cols}
-FROM (SELECT doc_id, hex(encode(text)) AS hp,
-             greatest(CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT), 1)
-               AS n
-      FROM documents)
-"""
-
-
-def q_dedup_semantic_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic dedup over a MEDIA column: payloads embed via
-    embed_media's chunk-hash projection, then the ordinary semantic_dedup
-    runs on the (vec_id, embedding) shape — the same operator serving
-    text now serves binary columns (VERDICT r4 #3). Planted exact payload
-    copies (doc_id+100000) must resolve dup_of to their original.
-    Centroids are the deterministic first-16-by-id picks passed in
-    explicitly (the production shape: a prebuilt centroid table)."""
-    from ganda_spark.operators.media import embed_media
-    from ganda_spark.operators.similarity import semantic_dedup_capped
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bt = to_binary_table(docs)
-    copies = bt.where(F.col("doc_id").cast("long") % 10 == 0).select(
-        (F.col("doc_id").cast("long") + 100000).cast("string").alias("doc_id"),
-        "payload",
-        "media_type",
-    )
-    corpus = (
-        embed_media(bt.unionByName(copies))
-        .select(
-            F.col("doc_id").cast("long").alias("vec_id"),
-            F.col("media_embedding").alias("embedding"),
-        )
-    )
-    cent = corpus.where(F.col("vec_id") < 16)
-    # GUARDED default (VERDICT r5 #1): a boilerplate-heavy media corpus
-    # hitting this entry point must never pay the unguarded Σ|list|² pair
-    # scan; max_list=4096 never triggers at oracle scale (verdicts equal
-    # the uncapped operator) but bounds degenerate blobs in production
-    out = semantic_dedup_capped(
-        corpus, threshold_bp=9990, centroids=cent, max_list=4096
-    )
-    return out.select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("list_id").cast("long").alias("list_id"),
-        "dup_of",
-        "is_semdup",
-    )
-
-
-def _sql_dedup_semantic_media() -> str:
-    def dim(j: int) -> str:
-        s, byte = divmod(j, 6)
-        h = (
-            f"CAST(('0x' || substr(md5(concat('{s}:', "
-            f"substring(hp, (i - 1) * 128 + 1, 128))), 1, 12)) AS BIGINT)"
-        )
-        return (
-            f"(list_sum([({h} >> {8 * byte}) & 255"
-            f" for i in generate_series(1, n)]) - 127.5 * n) / n"
-        )
-
-    vec = "[" + ",\n      ".join(dim(j) for j in range(16)) + "]"
-    cos_ab = _duck_cos("a.v", "b.v")
-    return f"""
-WITH me AS (
-  SELECT CAST(doc_id AS BIGINT) AS vec_id, {vec} AS v
-  FROM (SELECT doc_id, hex(encode(text)) AS hp,
-               greatest(CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT), 1)
-                 AS n
-        FROM documents)
-),
-e AS (
-  SELECT vec_id, v FROM me
-  UNION ALL
-  SELECT vec_id + 100000, v FROM me WHERE vec_id % 10 = 0
-),
-cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-{_duck_assign('e', 'cent', 's')},
-pairs AS (
-  SELECT b.vec_id AS j, min(a.vec_id) AS dup_of
-  FROM s a JOIN s b USING (list_id)
-  WHERE a.vec_id < b.vec_id AND round({cos_ab}, 4) >= 0.9990
-  GROUP BY b.vec_id
-)
-SELECT s.vec_id, CAST(s.list_id AS BIGINT) AS list_id,
-       CAST(coalesce(p.dup_of, -1) AS BIGINT) AS dup_of,
-       p.dup_of IS NOT NULL AS is_semdup
-FROM s LEFT JOIN pairs p ON s.vec_id = p.j
-"""
-
-
 def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-class ANN quality evaluator (VERDICT r4 #4): recall@5 of the
     LSH / IVF / quantized paths vs exact brute force on the same corpus
@@ -4385,69 +3903,6 @@ r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
 {its_sql}
 SELECT node, r AS rank_ppm FROM {prev}
 """
-
-
-def q_dedup_media_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate detection over a MEDIA column via the UNCHANGED
-    MinHash/LSH/Jaccard stack: payload chunks (hex, 64-byte) are the
-    shingles (operators/media.with_media_shingles), so truncated uploads
-    / re-sent files collide in bands exactly like overlapping texts.
-    Planted copies = payloads truncated to their full-chunk prefix
-    (docs ≥ 3 chunks, so chunk-set Jaccard ≥ 2/3) — found at ≥ 0.5.
-    Same scale shape as dedup_minhash_lsh: signatures persisted once,
-    bucket-keyed pair join, histogram-gated verify broadcast."""
-    from ganda_spark.operators.media import with_media_shingles
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bt = to_binary_table(docs).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "payload"
-    )
-    copies = bt.where(
-        (F.col("doc_id") % 2 == 0) & (F.length("payload") >= 192)
-    ).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.expr(
-            "substring(payload, 1, CAST((length(payload) DIV 64) * 64 AS INT))"
-        ).alias("payload"),
-    )
-    sh = with_media_shingles(bt.unionByName(copies)).select(
-        "doc_id", "shingles"
-    ).persist()
-    sigs = minhash_signatures(sh, k=8)
-    banded = lsh_band_hashes(sigs, k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
-    # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh
-    from ganda_spark.operators.dedup import lsh_verified_pairs
-
-    verified = lsh_verified_pairs(banded, sh, k=8, rows_per_band=2)
-    return verified.where(F.col("jaccard") >= 0.5)
-
-
-def _sql_dedup_media_minhash() -> str:
-    src = """mc AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, hex(encode(text)) AS hp,
-         greatest(CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT), 1)
-           AS n
-  FROM documents
-  UNION ALL
-  SELECT CAST(doc_id AS BIGINT) + 100000,
-         substring(hex(encode(text)), 1,
-                   CAST(octet_length(encode(text)) // 64 * 128 AS BIGINT)),
-         octet_length(encode(text)) // 64
-  FROM documents
-  WHERE doc_id % 2 = 0 AND octet_length(encode(text)) >= 192
-),
-sh AS (
-  SELECT doc_id,
-         [substring(hp, (i - 1) * 128 + 1, 128)
-          for i in generate_series(1, n)] AS shingles
-  FROM mc
-)"""
-    return (
-        f"WITH {_sql_lsh_ctes('a.doc_id < b.doc_id', source_ctes=src)}\n"
-        "SELECT id_a, id_b, jaccard FROM verified"
-    )
 
 
 def q_curate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4678,58 +4133,6 @@ bfp AS (
 SELECT b.doc_id, coalesce(c.corpus_id, '-') AS dup_of,
        c.corpus_id IS NOT NULL AS is_dup
 FROM bfp b LEFT JOIN cmin c USING (span_fp)
-"""
-
-
-def q_sim_media_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Similarity SEARCH over a media column: embed_media's chunk-hash
-    embeddings feed the unchanged brute_force_topk — nearest-payload
-    lookup (find re-uploads / shared-prefix files for a query asset) with
-    the same operator that serves text embeddings."""
-    from ganda_spark.operators.media import embed_media
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = embed_media(to_binary_table(docs)).select(
-        F.col("doc_id").cast("long").alias("vec_id"),
-        F.col("media_embedding").alias("embedding"),
-    )
-    q = emb.where(F.col("vec_id") < 10)
-    return brute_force_topk(emb, q, k=5).select(
-        F.col("qid").cast("long").alias("qid"),
-        F.col("nid").cast("long").alias("nid"),
-        "rank",
-        "cos_r",
-    )
-
-
-def _sql_sim_media_topk() -> str:
-    def dim(j: int) -> str:
-        s, byte = divmod(j, 6)
-        h = (
-            f"CAST(('0x' || substr(md5(concat('{s}:', "
-            f"substring(hp, (i - 1) * 128 + 1, 128))), 1, 12)) AS BIGINT)"
-        )
-        return (
-            f"(list_sum([({h} >> {8 * byte}) & 255"
-            f" for i in generate_series(1, n)]) - 127.5 * n) / n"
-        )
-
-    vec = "[" + ",\n      ".join(dim(j) for j in range(16)) + "]"
-    cos_qn = _duck_cos("q.v", "n.v")
-    return f"""
-WITH e AS (
-  SELECT CAST(doc_id AS BIGINT) AS vec_id, {vec} AS v
-  FROM (SELECT doc_id, hex(encode(text)) AS hp,
-               greatest(CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT), 1)
-                 AS n
-        FROM documents)
-)
-SELECT qid, nid, CAST(rank AS BIGINT) AS rank, cos_r FROM (
-  SELECT q.vec_id AS qid, n.vec_id AS nid, round({cos_qn}, 4) AS cos_r,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY {cos_qn} DESC, n.vec_id ASC) AS rank
-  FROM e q JOIN e n ON q.vec_id < 10 AND q.vec_id <> n.vec_id
-) WHERE rank <= 5
 """
 
 
@@ -5099,41 +4502,6 @@ WHERE least(n_words * 100, 10000) // 2 +
 
 
 # ---------------------------------------------------------------------------
-# broadcast-vocab subword tokenizer (r6, VERDICT r5 next #6)
-# ---------------------------------------------------------------------------
-
-
-def q_text_token_counts_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy longest-match wordpiece counts over documents (broadcast
-    one-row vocab, bounded pure-Column fold per word — functions/subword).
-    The oracle re-derives the same greedy segmentation via a recursive
-    CTE over word TYPES, so the two implementations are independent."""
-    from ganda_spark.functions.subword import token_counts_subword
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # by_type: the production path — 4.7× faster than the inline fold on
-    # the r6 60k-doc rehearsal (types ≪ occurrences); equivalence to the
-    # inline form is test-pinned, so the oracle is unchanged
-    return token_counts_subword(docs, by_type=True).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_ws_tokens",
-        "n_subword_tokens",
-    )
-
-
-def _sql_token_counts_subword() -> str:
-    from ganda_spark.functions.subword import duck_subword_ctes
-
-    return f"""
-WITH RECURSIVE {duck_subword_ctes()}
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-       CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_ws_tokens,
-       s.n_subword_tokens
-FROM documents d JOIN subword_counts s ON s._swid = d.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # F8 RFC 9309 gate (r6, VERDICT r5 missing #2)
 # ---------------------------------------------------------------------------
 
@@ -5349,69 +4717,232 @@ FROM corpus GROUP BY 1
 """
 
 
-def q_text_vocab_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-64 character-n-gram vocabulary induced from the corpus
-    (functions/subword.induce_vocab): occurrence-weighted gram counts
-    over word types — the counting core of BPE/wordpiece induction. The
-    induced pieces drop into token_counts_subword's vocab argument."""
-    from ganda_spark.functions.subword import induce_vocab
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return induce_vocab(docs)
+# ---------------------------------------------------------------------------
+# Frontier-loop state: delta-checkpoint reconstruction + mirror keeper
+# (streaming/frontier_loop.CrawlDriver over a CheckpointStore)
+# ---------------------------------------------------------------------------
 
 
-def _sql_text_vocab_induction() -> str:
-    from ganda_spark.functions.subword import duck_vocab_induction_sql
+def _checkpoint_dir(prefix: str) -> str:
+    """A fresh checkpoint root, removed at interpreter exit: the returned
+    DataFrame reads it lazily, so it must outlive the query call."""
+    import atexit
+    import shutil
+    import tempfile
 
-    return duck_vocab_induction_sql()
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, True)
+    return root
 
 
-# Registry order is LOAD-BEARING (VERDICT r4 #7): the driver's
-# CORRECTNESS artifact consistently captures only the FIRST 50 entries, so
-# the first 50 below are the operators a production user leans on hardest —
-# the reference-parity crawl backbone (24) plus the heavy training-data
-# pipeline operators (dedup/decontam/mix/curation/media + this round's
-# additions). Everything past 50 stays oracle-checked by
-# tools/check_oracle.py in the round-close ritual.
+def _frontier_rows(frontier: DataFrame, attempt: int, not_before: int) -> DataFrame:
+    return frontier.select(
+        "seq", "url", "host", "priority", "context",
+        F.lit(attempt).alias("attempt"), F.lit(not_before).alias("not_before"),
+    )
+
+
+def q_frontier_delta_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta-mode resume: a full gen-0 snapshot plus two delta commits,
+    folded back by CrawlDriver.load_state. The logical frontier is
+    base ∪ adds, anti-joined against removes committed in a LATER
+    generation than the row itself, keyed by (seq, url) — so a row
+    re-added after its removal (a redelivery) survives, and a remove
+    whose url differs from the row's (a seq collision) removes nothing."""
+    from ganda_spark.streaming.checkpoint import CheckpointStore
+    from ganda_spark.streaming.frontier_loop import CrawlDriver
+
+    root = _checkpoint_dir("ganda_delta_")
+    store = CheckpointStore(root)
+    fr = seed_frontier(spark, sf_dir)
+    store.commit(0, {
+        "frontier": _frontier_rows(fr.where(F.col("seq") % 4 != 0), 0, 0),
+        "seen": fr.where(F.col("seq") % 10 == 0).select("url"),
+    }, {})
+    store.commit(1, {
+        "frontier_adds": _frontier_rows(fr.where(F.col("seq") % 4 == 0), 0, 0),
+        "frontier_removes": fr.where(F.col("seq") % 3 == 0).select("seq", "url"),
+        "seen_adds": fr.where(F.col("seq") % 3 == 0).select("url"),
+    }, {})
+    store.commit(2, {
+        "frontier_adds": _frontier_rows(fr.where(F.col("seq") % 6 == 0), 1, 3),
+        "frontier_removes": fr.where(F.col("seq") % 5 == 0).select("seq", "url")
+        .unionByName(
+            fr.where(F.col("seq") % 7 == 0).select(
+                "seq", F.concat("url", F.lit("#mirror")).alias("url")
+            )
+        ),
+        "seen_adds": fr.where(F.col("seq") % 5 == 0).select("url"),
+    }, {})
+    driver = CrawlDriver(spark, EngineConfig(), root, checkpoint_mode="delta")
+    next_gen, frontier, _seen = driver.load_state(fr)
+    return frontier.select(
+        F.lit(next_gen).alias("next_gen"),
+        "seq", "url", "host", "priority", "attempt", "not_before",
+    )
+
+
+_SQL_FRONTIER_DELTA = f"""
+WITH {_DUCK_FRONTIER},
+adds AS (
+  SELECT seq, url, host, priority, 0 AS attempt, 0 AS not_before, 0 AS g
+  FROM frontier WHERE seq % 4 <> 0
+  UNION ALL
+  SELECT seq, url, host, priority, 0, 0, 1 FROM frontier WHERE seq % 4 = 0
+  UNION ALL
+  SELECT seq, url, host, priority, 1, 3, 2 FROM frontier WHERE seq % 6 = 0
+),
+removes AS (
+  SELECT seq, url, 1 AS g FROM frontier WHERE seq % 3 = 0
+  UNION ALL
+  SELECT seq, url, 2 FROM frontier WHERE seq % 5 = 0
+  UNION ALL
+  SELECT seq, url || '#mirror', 2 FROM frontier WHERE seq % 7 = 0
+)
+SELECT 3 AS next_gen, seq, url, host, priority, attempt, not_before
+FROM adds a
+WHERE NOT EXISTS (
+  SELECT 1 FROM removes r WHERE r.seq = a.seq AND r.url = a.url AND r.g > a.g
+)
+"""
+
+_MIRROR_PAGES = 997  # result bodies repeat every 997 seqs
+
+
+def _mirror_fetcher(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The mock fetch with every body replaced by one of _MIRROR_PAGES
+    pages, so many URLs serve byte-identical content."""
+    return mock_fetch_udf(df, cfg).withColumn(
+        "body",
+        F.concat(F.lit("PAGE-"), (F.col("seq") % _MIRROR_PAGES).cast("string")),
+    )
+
+
+def q_crawl_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """content_dedup mirror keeper over two real generations: within a
+    generation the lowest seq per md5(body) is kept, then rows whose hash
+    an earlier generation already kept are dropped (the anti-join against
+    the checkpointed seen_content). Returns the committed results."""
+    from ganda_spark.streaming.checkpoint import CheckpointStore
+    from ganda_spark.streaming.frontier_loop import CrawlDriver
+
+    root = _checkpoint_dir("ganda_mirror_")
+    cfg = EngineConfig(retries=1, per_host_budget=20)
+    driver = CrawlDriver(
+        spark, cfg, root, fetcher=_mirror_fetcher, content_dedup=True
+    )
+    driver.run(seed_frontier(spark, sf_dir), max_generations=2)
+    store = CheckpointStore(root)
+    gens = [store.read_lineage(spark, g, "results") for g in (0, 1)]
+    return gens[0].unionByName(gens[1]).select(
+        F.col("_batch_id").alias("generation"),
+        "seq",
+        "url",
+        F.md5(F.col("body").cast("binary")).alias("content_hash"),
+    )
+
+
+def _sql_crawl_content_dedup() -> str:
+    o = spec.fetch_outcome_sql("duckdb", retries=1)
+    return f"""
+WITH {_DUCK_FRONTIER},
+ranked AS (
+  SELECT seq, url,
+         (row_number() OVER (PARTITION BY host ORDER BY priority, seq) - 1)
+           // 20 AS generation
+  FROM frontier
+),
+results AS (
+  SELECT generation, seq, url,
+         md5('PAGE-' || CAST(seq % {_MIRROR_PAGES} AS VARCHAR)) AS content_hash
+  FROM ranked WHERE generation < 2 AND NOT {o['dropped']}
+),
+kept AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY generation, content_hash ORDER BY seq) AS rk
+    FROM results
+  ) WHERE rk = 1
+)
+SELECT generation, seq, url, content_hash FROM kept k
+WHERE NOT EXISTS (
+  SELECT 1 FROM results p
+  WHERE p.content_hash = k.content_hash AND p.generation < k.generation
+)
+"""
+
+
+# ---------------------------------------------------------------------------
+# S5 → T6: JSON-lines requests through the stdout sink's JSON envelope
+# ---------------------------------------------------------------------------
+
+
+def q_s5_json_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON-lines input end to end: parse_json_lines → mock fetch → the
+    line the stdout sink prints. The context is carried as raw JSON
+    (object, number, escaped string or absent) and emitted verbatim,
+    not re-marshaled like a TSV line's []string context."""
+    from ganda_spark.functions.urls import url_host
+    from ganda_spark.operators.fetch import split_results
+    from ganda_spark.sinks import _line_col
+
+    frontier = seed_frontier(spark, sf_dir)
+    seq = F.col("seq").cast("string")
+    ctx = (
+        F.when(F.col("seq") % 4 == 0,
+               F.concat(F.lit(',"context":{"id":'), seq, F.lit(',"k":"v"}')))
+        .when(F.col("seq") % 4 == 1,
+              F.concat(F.lit(',"context":"a<b-'), seq, F.lit('"')))
+        .when(F.col("seq") % 4 == 2, F.concat(F.lit(',"context":'), seq))
+        .otherwise(F.lit(""))
+    )
+    line = F.concat(F.lit('{"url":"'), F.col("url"), F.lit('"'), ctx, F.lit("}"))
+    cfg = EngineConfig(retries=1, json_envelope=True, response_body="sha256")
+    # the mock echo never reads a request body; drop it so the response
+    # `body` the fetch appends is the only column of that name
+    reqs = parse_json_lines(frontier.select(line.alias("value")), cfg).drop("body")
+    fetched = mock_fetch_udf(reqs.withColumn("host", url_host(F.col("url"))), cfg)
+    results, _errors = split_results(fetched)
+    return results.select("url", _line_col(cfg, results.columns).alias("line"))
+
+
+def _sql_s5_json_envelope() -> str:
+    o = spec.fetch_outcome_sql("duckdb", retries=1)
+    body = spec.echo_body_sql("duckdb", "url", "host")
+    return f"""
+WITH {_DUCK_FRONTIER},
+fetched AS (
+  SELECT seq, url,
+         CAST({o['status_final']} AS INT) AS status,
+         {o['dropped']} AS dropped,
+         CASE WHEN {o['status_final']} = 200 THEN {body} ELSE '' END AS body
+  FROM frontier
+)
+SELECT url,
+       concat('{{ "url": "', url, '", "code": ', CAST(status AS VARCHAR),
+              ', "body": ',
+              CASE WHEN length(body) > 0 THEN concat('"', sha256(body), '"')
+                   ELSE 'null' END,
+              CASE seq % 4
+                WHEN 0 THEN concat(', "context": {{"id":', CAST(seq AS VARCHAR), ',"k":"v"}}')
+                WHEN 1 THEN concat(', "context": "a', {_BS}, 'u003cb-', CAST(seq AS VARCHAR), '"')
+                WHEN 2 THEN concat(', "context": ', CAST(seq AS VARCHAR))
+                ELSE '' END,
+              ' }}') AS line
+FROM fetched WHERE NOT dropped
+"""
+
+
+# The crawl backbone comes first: it mirrors the reference's request
+# parsing, fetch/retry, transforms and sinks; the frontier-scale operators
+# (seen set, politeness, robots, checkpoints, spans) follow, then the link
+# graph and the corpus-curation operators. Every entry is oracle-checked
+# by tools/check_oracle.py.
 _REGISTRY: dict[str, tuple[Callable, str | None]] = {
-    # --- r6 additions: the body→clean-text hop (VERDICT r5 #1) ---
-    "text_extract_html": (q_text_extract_html, _sql_text_extract_html()),
-    "text_boilerplate_removal": (
-        q_text_boilerplate_removal,
-        _sql_text_boilerplate(),
-    ),
-    "corpus_clean_pipeline": (
-        q_corpus_clean_pipeline,
-        _sql_corpus_clean_pipeline(),
-    ),
-    "f8_rfc_robots": (
-        q_f8_rfc_robots,
-        _SQL_F8_RFC.format(frontier=_DUCK_FRONTIER),
-    ),
-    "text_token_counts_subword": (
-        q_text_token_counts_subword,
-        _sql_token_counts_subword(),
-    ),
-    "text_normalize": (q_text_normalize, _sql_text_normalize()),
-    "dedup_exact_normalized": (
-        q_dedup_exact_normalized,
-        _sql_dedup_exact_normalized(),
-    ),
-    "text_vocab_induction": (q_text_vocab_induction, _sql_text_vocab_induction()),
-    "text_quality_gopher": (q_text_quality_gopher, _sql_text_quality_gopher()),
-    "corpus_export_shards": (q_corpus_export_shards, _SQL_EXPORT_SHARDS),
-    "corpus_release_pipeline": (
-        q_corpus_release_pipeline,
-        _sql_corpus_release_pipeline(),
-    ),
-    "curate_source_cap": (q_curate_source_cap, _SQL_SOURCE_CAP),
-    "dedup_lsh_recall_report": (
-        q_dedup_lsh_recall_report,
-        _sql_lsh_recall_report(),
-    ),
-    # --- reference-parity crawl backbone (driver-visible) ---
+    # --- reference-parity crawl backbone ---
     "s4_url_tsv_parse": (q_s4_url_tsv_parse, _SQL_S4),
     "s5_json_parse": (q_s5_json_parse, _SQL_S5),
+    "s5_json_envelope": (q_s5_json_envelope, _sql_s5_json_envelope()),
     "s6_body_decode": (q_s6_body_decode, _SQL_S6),
     "t_transform_matrix": (q_t_transform_matrix, _SQL_T_MATRIX),
     "t6_envelope": (q_t6_envelope, _SQL_T6),
@@ -5434,22 +4965,93 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "f5_throttle_waves": (q_f5_throttle_waves, _SQL_F5),
     "k2_file_manifest": (q_k2_file_manifest, _sql_k2()),
     "k3_status_lines": (q_k3_status_lines, _sql_k3()),
-    # --- load-bearing training-data pipeline ops (driver-visible) ---
+    # --- frontier scale: state, politeness, robots, discovery ---
+    "frontier_delta_reconstruct": (q_frontier_delta_reconstruct, _SQL_FRONTIER_DELTA),
+    "crawl_content_dedup": (q_crawl_content_dedup, _sql_crawl_content_dedup()),
+    "f8_rfc_robots": (
+        q_f8_rfc_robots,
+        _SQL_F8_RFC.format(frontier=_DUCK_FRONTIER),
+    ),
+    "f8_sitemap_links": (
+        q_f8_sitemap_links,
+        _SQL_F8_SITEMAPS.format(frontier=_DUCK_FRONTIER),
+    ),
+    "s11_sitemap_extract": (
+        q_s11_sitemap_extract,
+        _SQL_S11_SITEMAP.format(frontier=_DUCK_FRONTIER),
+    ),
+    "t9_param_canon": (
+        q_t9_param_canon,
+        _SQL_PARAM_CANON.format(frontier=_DUCK_FRONTIER),
+    ),
+    "crawl_trap_filter": (
+        q_crawl_trap_filter,
+        _SQL_TRAP.format(frontier=_DUCK_FRONTIER),
+    ),
+    "crawl_recrawl_schedule": (
+        q_crawl_recrawl_schedule,
+        _SQL_RECRAWL.format(frontier=_DUCK_FRONTIER),
+    ),
+    "crawl_host_health": (
+        q_crawl_host_health,
+        _SQL_HOST_HEALTH.format(fetched=_fetched_cte(retries=1)),
+    ),
+    "crawl_adaptive_pop": (q_crawl_adaptive_pop, _sql_crawl_adaptive_pop()),
+    "crawl_host_indegree": (q_crawl_host_indegree, _SQL_INDEGREE),
+    # --- fetched content: HTML text, span documents ---
+    "text_extract_html": (q_text_extract_html, _sql_text_extract_html()),
+    "text_boilerplate_removal": (
+        q_text_boilerplate_removal,
+        _sql_text_boilerplate(),
+    ),
+    "dedup_spans_exact": (q_dedup_spans_exact, _sql_dedup_spans_exact()),
+    "dedup_spans_incremental": (q_dedup_spans_incremental, _sql_dedup_spans_incremental()),
+    # --- relational operators over the TPC-H-style test tables ---
+    "events_hourly": (q_events_hourly, _SQL_EVENTS),
+    "agg_pricing_summary": (q_agg_pricing_summary, _SQL_PRICING),
+    "events_sessionize": (q_events_sessionize, _SQL_SESSIONIZE),
+    "join_revenue_by_nation": (q_join_revenue_by_nation, _SQL_JOIN_REVENUE),
+    "topk_orders_per_customer": (q_topk_orders_per_customer, _SQL_TOPK_ORDERS),
+    # --- link graph: PageRank over crawled links, rank-tiered pop ---
+    "crawl_host_pagerank": (q_crawl_host_pagerank, _sql_pagerank()),
+    "crawl_pagerank_normalized": (
+        q_crawl_pagerank_normalized,
+        _sql_pagerank_normalized(),
+    ),
+    "crawl_tiered_pop": (q_crawl_tiered_pop, _sql_tiered_pop()),
+    # --- corpus curation: text facets over fetched documents ---
+    "text_lang_id": (q_text_lang_id, _sql_lang()),
+    "text_quality": (q_text_quality, _SQL_QUALITY),
+    "text_token_counts": (q_text_token_counts, _SQL_TOKENS),
+    "text_fingerprint": (q_text_fingerprint, _SQL_FINGERPRINT),
+    "text_embed": (q_text_embed, _sql_text_embed()),
+    "text_pii": (q_text_pii, _sql_text_pii()),
+    "text_keywords": (q_text_keywords, _sql_text_keywords()),
+    "text_repetition": (q_text_repetition, _SQL_REPETITION),
+    "text_chunks": (q_text_chunks, _SQL_TEXT_CHUNKS),
+    "text_normalize": (q_text_normalize, _sql_text_normalize()),
+    # --- corpus curation: dedup, similarity, sampling, export ---
+    "corpus_clean_pipeline": (
+        q_corpus_clean_pipeline,
+        _sql_corpus_clean_pipeline(),
+    ),
+    "dedup_exact_normalized": (
+        q_dedup_exact_normalized,
+        _sql_dedup_exact_normalized(),
+    ),
+    "corpus_export_shards": (q_corpus_export_shards, _SQL_EXPORT_SHARDS),
+    "curate_source_cap": (q_curate_source_cap, _SQL_SOURCE_CAP),
+    "dedup_lsh_recall_report": (
+        q_dedup_lsh_recall_report,
+        _sql_lsh_recall_report(),
+    ),
     "dedup_semantic": (q_dedup_semantic, _sql_dedup_semantic()),
     "dedup_semantic_capped": (q_dedup_semantic_capped, _sql_dedup_semantic_capped()),
     "dedup_semantic_incremental": (
         q_dedup_semantic_incremental,
         _sql_dedup_semantic_incremental(),
     ),
-    "dedup_semantic_media": (q_dedup_semantic_media, _sql_dedup_semantic_media()),
-    "mm_embed": (q_mm_embed, _sql_mm_embed()),
     "sim_recall_report": (q_sim_recall_report, _sql_recall_report()),
-    "crawl_pagerank_normalized": (
-        q_crawl_pagerank_normalized,
-        _sql_pagerank_normalized(),
-    ),
-    "text_decontam": (q_text_decontam, _SQL_DECONTAM),
-    "text_decontam_bloom": (q_text_decontam_bloom, _SQL_DECONTAM),
     "mix_corpus": (q_mix_corpus, _sql_mix_corpus()),
     "corpus_build_pipeline": (q_corpus_build_pipeline, _sql_corpus_build()),
     "curate_keep_best": (q_curate_keep_best, _sql_curate_keep_best()),
@@ -5457,20 +5059,6 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "dedup_minhash_incremental": (q_dedup_minhash_incremental, _sql_minhash_incremental()),
     "sim_ivf_kmeans_topk": (q_sim_ivf_kmeans_topk, _sql_ivf_kmeans_topk()),
     "sim_quantized_topk": (q_sim_quantized_topk, _sql_quantized_topk()),
-    "crawl_host_pagerank": (q_crawl_host_pagerank, _sql_pagerank()),
-    "crawl_tiered_pop": (q_crawl_tiered_pop, _sql_tiered_pop()),
-    "crawl_trap_filter": (
-        q_crawl_trap_filter,
-        _SQL_TRAP.format(frontier=_DUCK_FRONTIER),
-    ),
-    "text_pii": (q_text_pii, _sql_text_pii()),
-    "text_keywords": (q_text_keywords, _sql_text_keywords()),
-    "text_repetition": (q_text_repetition, _SQL_REPETITION),
-    "text_chunks": (q_text_chunks, _SQL_TEXT_CHUNKS),
-    "mm_decode_real": (q_mm_decode_real, _SQL_MM_DECODE_REAL),
-    "mm_resize_real": (q_mm_resize_real, _SQL_MM_RESIZE_REAL),
-    "mm_audio_chunks": (q_mm_audio_chunks, _SQL_MM_AUDIO_CHUNKS),
-    # --- entry 51+ (green via tools/check_oracle.py sweeps) ---
     "curate_corpus": (q_curate_corpus, _sql_curate()),
     "dedup_exact": (q_dedup_exact, _SQL_DEDUP_EXACT),
     "dedup_minhash_sig": (q_dedup_minhash_sig, _sql_minhash_sig()),
@@ -5482,92 +5070,14 @@ _REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "sim_lsh_buckets": (q_sim_lsh_buckets, _sql_lsh_buckets()),
     "sim_ann_topk": (q_sim_ann_topk, _sql_ann_topk()),
     "sim_ivf_topk": (q_sim_ivf_topk, _sql_ivf_topk()),
-    "text_lang_id": (q_text_lang_id, _sql_lang()),
-    "text_quality": (q_text_quality, _SQL_QUALITY),
-    "text_token_counts": (q_text_token_counts, _SQL_TOKENS),
-    "text_fingerprint": (q_text_fingerprint, _SQL_FINGERPRINT),
-    "text_embed": (q_text_embed, _sql_text_embed()),
-    "mm_binary_meta": (q_mm_binary_meta, _SQL_MM_META),
-    "mm_decode_stub": (q_mm_decode_stub, _SQL_MM_DECODE),
-    "mm_resize": (q_mm_resize, _SQL_MM_RESIZE),
-    "mm_frame_sample": (q_mm_frame_sample, _SQL_MM_FRAMES),
-    "events_hourly": (q_events_hourly, _SQL_EVENTS),
-    "agg_pricing_summary": (q_agg_pricing_summary, _SQL_PRICING),
-    "events_sessionize": (q_events_sessionize, _SQL_SESSIONIZE),
-    "agg_latency_quantiles": (q_agg_latency_quantiles, _SQL_LATENCY_QUANTILES),
-    "crawl_host_indegree": (q_crawl_host_indegree, _SQL_INDEGREE),
     "sample_stratified": (q_sample_stratified, _SQL_SAMPLE),
     "pack_token_budget": (q_pack_token_budget, _SQL_PACK),
     "dedup_clusters": (q_dedup_clusters, _sql_dedup_clusters()),
-    "join_revenue_by_nation": (q_join_revenue_by_nation, _SQL_JOIN_REVENUE),
-    "topk_orders_per_customer": (q_topk_orders_per_customer, _SQL_TOPK_ORDERS),
     "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, _SQL_NGRAM_JACCARD),
-    "f8_sitemap_links": (
-        q_f8_sitemap_links,
-        _SQL_F8_SITEMAPS.format(frontier=_DUCK_FRONTIER),
-    ),
-    "t9_param_canon": (
-        q_t9_param_canon,
-        _SQL_PARAM_CANON.format(frontier=_DUCK_FRONTIER),
-    ),
-    "s11_sitemap_extract": (
-        q_s11_sitemap_extract,
-        _SQL_S11_SITEMAP.format(frontier=_DUCK_FRONTIER),
-    ),
-    "crawl_recrawl_schedule": (
-        q_crawl_recrawl_schedule,
-        _SQL_RECRAWL.format(frontier=_DUCK_FRONTIER),
-    ),
-    "crawl_host_health": (
-        q_crawl_host_health,
-        _SQL_HOST_HEALTH.format(fetched=_fetched_cte(retries=1)),
-    ),
-    "dedup_media_minhash": (q_dedup_media_minhash, _sql_dedup_media_minhash()),
     "curate_semantic": (q_curate_semantic, _sql_curate_semantic()),
-    "dedup_spans_exact": (q_dedup_spans_exact, _sql_dedup_spans_exact()),
     "dedup_spans_minhash": (q_dedup_spans_minhash, _sql_dedup_spans_minhash()),
-    "sim_media_topk": (q_sim_media_topk, _sql_sim_media_topk()),
-    "crawl_adaptive_pop": (q_crawl_adaptive_pop, _sql_crawl_adaptive_pop()),
-    "dedup_spans_incremental": (q_dedup_spans_incremental, _sql_dedup_spans_incremental()),
-}
-
-# Driver-window ROTATION (VERDICT r5 wrong #2 / next #4): the driver's
-# CORRECTNESS artifact captures only the first 50 registry entries, so the
-# front rotates each round until every entry has a driver-green row within
-# two rounds. r6 window = the 18 entries that have NEVER had a driver row,
-# the 5 new r6 entries, the 2 entries whose code changed this round
-# (mm_decode_real gained JPEG rows; dedup_semantic_media composes the
-# capped operator now), and the 25 entries last driver-checked in r4.
-# The r5-green remainder stays oracle-checked by tools/check_oracle.py in
-# the round-close ritual.
-_R6_WINDOW = [
-    # never driver-verified (r5 verdict header list)
-    "sample_stratified", "pack_token_budget", "dedup_clusters",
-    "join_revenue_by_nation", "topk_orders_per_customer",
-    "dedup_ngram_jaccard", "f8_sitemap_links", "t9_param_canon",
-    "s11_sitemap_extract", "crawl_recrawl_schedule", "crawl_host_health",
-    "dedup_media_minhash", "curate_semantic", "dedup_spans_exact",
-    "dedup_spans_minhash", "sim_media_topk", "crawl_adaptive_pop",
-    "dedup_spans_incremental",
-    # new in r6
-    "text_extract_html", "text_boilerplate_removal", "corpus_clean_pipeline",
-    "f8_rfc_robots", "text_token_counts_subword", "text_normalize",
-    "dedup_exact_normalized", "text_vocab_induction", "text_quality_gopher",
-    "corpus_export_shards", "corpus_release_pipeline", "curate_source_cap",
-    "dedup_lsh_recall_report",
-    # code changed in r6
-    "mm_decode_real", "dedup_semantic_media",
-    # last driver-checked in r4 (events_hourly / agg_pricing_summary /
-    # crawl_host_indegree yield their slots to the 3 extra r6 entries —
-    # driver-green r4 AND judge-swept r5, the most-corroborated rows here)
-    "curate_corpus", "dedup_exact", "dedup_minhash_sig", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_simhash_pairs", "dedup_embedding",
-    "sim_topk_brute", "sim_lsh_buckets", "sim_ann_topk", "sim_ivf_topk",
-    "text_lang_id", "text_quality", "text_token_counts", "text_fingerprint",
-    "text_embed", "mm_binary_meta",
-]
-assert len(_R6_WINDOW) == 50 and len(set(_R6_WINDOW)) == 50
-_REGISTRY = {
-    **{n: _REGISTRY[n] for n in _R6_WINDOW},
-    **{k: v for k, v in _REGISTRY.items() if k not in set(_R6_WINDOW)},
+    # --- corpus curation: header-level media parse ---
+    "mm_decode_real": (q_mm_decode_real, _SQL_MM_DECODE_REAL),
+    "mm_resize_real": (q_mm_resize_real, _SQL_MM_RESIZE_REAL),
+    "mm_audio_chunks": (q_mm_audio_chunks, _SQL_MM_AUDIO_CHUNKS),
 }

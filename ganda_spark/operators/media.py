@@ -18,10 +18,8 @@ This module provides:
   * `resize_real`        — the aspect-fit geometry pass over REAL parsed
     dimensions (integer basis-point math, engine-reproducible).
 
-The pixel/sample DECODE (rasterizing IDAT, resampling PCM) still needs
-PIL/ffmpeg and stays gated in operators/multimodal.py `_decode_real` —
-which now performs the same header parse in Python for PNG/WAV instead of
-raising (VERDICT r3 "Next round" #1).
+The pixel/sample DECODE (rasterizing IDAT, resampling PCM) needs
+PIL/ffmpeg and is out of scope here.
 
 Format references (public specs):
   PNG: W3C PNG spec §5.2 (signature), §11.2.2 (IHDR layout).
@@ -353,10 +351,9 @@ def resize_real(
     binary_df: DataFrame, max_w: int = 512, max_h: int = 512
 ) -> DataFrame:
     """Aspect-preserving fit into (max_w, max_h) over REAL header-parsed
-    dimensions — integer basis-point scale (never upscales), identical
-    math to multimodal.resize_meta but fed by true geometry. Built on
-    header_meta, so every format it can dimension (PNG IHDR, JPEG SOF —
-    r6) resizes; rows without dimensions are filtered."""
+    dimensions — integer basis-point scale (never upscales), fed by true
+    geometry. Built on header_meta, so every format it can dimension (PNG
+    IHDR, JPEG SOF — r6) resizes; rows without dimensions are filtered."""
     meta = header_meta(binary_df).where(
         F.col("width").isNotNull() & F.col("height").isNotNull()
     )

@@ -1,6 +1,6 @@
 """Structured Streaming front door — ganda's continuous pipe model as a
 stream: `readStream` on a directory of URL-line files (the unbounded
-stdin), crawl_generation inside `foreachBatch`, results appended per
+stdin), parse → fetch → split inside `foreachBatch`, results appended per
 micro-batch with exactly-once file-source tracking.
 
 The reference is a single-pass bounded stream with channel backpressure

@@ -1,11 +1,9 @@
 """Header-level REAL media decode (operators/media): synthetic payloads
 carry spec-valid PNG/WAV/MP4 headers, the parse is pure Column byte
-arithmetic, and the Python twin in multimodal._decode_real agrees
-bit-for-bit. The payload itself is the oracle (echoserver pattern)."""
+arithmetic. The payload itself is the oracle (echoserver pattern)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ganda_spark.operators.media import (
@@ -20,7 +18,6 @@ from ganda_spark.operators.media import (
     resize_real,
     synth_media_table,
 )
-from ganda_spark.operators.multimodal import _decode_real
 
 
 def _media(spark, n=60):
@@ -48,27 +45,6 @@ def test_header_meta_roundtrip(spark):
             assert r.format == "mp4"
             assert r.n_bytes == 24
             assert r.width is None and r.duration_ms is None
-
-
-def test_decode_real_matches_column_parse(spark):
-    """The gated Python decoder and the distributed Column parse are the
-    same function for header-level formats."""
-    for d in (0, 3, 12):
-        meta = _decode_real(_png_bytes(d), "image/png")
-        assert meta == {
-            "format": "png", "width": PNG_W(d), "height": PNG_H(d),
-            "sample_rate_hz": None, "duration_ms": None,
-        }
-    for d in (1, 7, 25):
-        meta = _decode_real(_wav_bytes(d), "audio/wav")
-        assert meta["format"] == "wav"
-        assert meta["sample_rate_hz"] == WAV_RATE
-        assert meta["duration_ms"] == WAV_DUR_MS(d)
-    # pixel formats still require a real decoder lib
-    with pytest.raises(NotImplementedError):
-        _decode_real(b"\xff\xd8\xff\xe0jpegish", "image/jpeg")
-    with pytest.raises(NotImplementedError):
-        _decode_real(_mp4_bytes(2), "video/mp4")
 
 
 def test_header_meta_garbage_and_truncation_safe(spark):

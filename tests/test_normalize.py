@@ -1,15 +1,13 @@
-"""Unicode normalization + mojibake detection (functions/normalize) and
-vocab induction (functions/subword.induce_vocab): hand-verified outputs
-for every NORM_STEPS family, NULL semantics, the normalize→exact-dedup
-collapse property, induced-vocab correctness and determinism, and the
-shuffle-free plan shape of the normalization projection."""
+"""Unicode normalization + mojibake detection (functions/normalize):
+hand-verified outputs for every NORM_STEPS family, NULL semantics, the
+normalize→exact-dedup collapse property, and the shuffle-free plan shape
+of the normalization projection."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from ganda_spark.functions.normalize import normalize_text
-from ganda_spark.functions.subword import induce_vocab, token_counts_subword
 from ganda_spark.operators.dedup import exact_dup_groups
 
 
@@ -90,44 +88,3 @@ def test_normalize_plan_is_projection(spark):
     final = plan.split("== Initial Plan ==")[0]
     assert "Exchange" not in final
 
-
-def test_induce_vocab_hand_corpus(spark):
-    """'aaab' ×2 + 'aaac' ×1: each gram POSITION within a word type
-    contributes that type's occurrence count. 'aa' sits at 2 positions in
-    each type → 2·2 (aaab) + 2·1 (aaac) = 6."""
-    df = spark.createDataFrame(
-        [(0, "aaab aaab aaac")], "doc_id long, text string"
-    )
-    out = {r.piece: (r.rank, r.weight) for r in induce_vocab(df).collect()}
-    # aa: positions 1,2 in both types → 2*2 + 2*1 = 6
-    assert out["aa"][1] == 6
-    # aaa: one position per type → 2 + 1 = 3; tie with 'aab'(2)? no: aab=2
-    assert out["aaa"][1] == 3
-    assert out["aab"][1] == 2
-    assert out["aac"][1] == 1
-    assert out["aaab"][1] == 2 and out["aaac"][1] == 1
-    # rank 1 is the highest weight, ties break lexicographically
-    assert out["aa"][0] == 1
-
-
-def test_induce_vocab_deterministic_tie_break(spark):
-    df = spark.createDataFrame([(0, "ab cd ab cd")], "doc_id long, text string")
-    rows = induce_vocab(df).collect()
-    # 'ab' and 'cd' both weight 2 → lexicographic order breaks the tie
-    assert [(r.rank, r.piece) for r in rows] == [(1, "ab"), (2, "cd")]
-
-
-def test_induced_vocab_feeds_subword_counter(spark):
-    """The induction output drops into token_counts_subword's vocab arg;
-    single-char fallback keeps totality for unseen characters."""
-    corpus = spark.createDataFrame(
-        [(0, "data data tables")], "doc_id long, text string"
-    )
-    vocab = tuple(r.piece for r in induce_vocab(corpus, top_n=16).collect())
-    df = spark.createDataFrame([(0, "data qzx")], "doc_id long, text string")
-    row = token_counts_subword(df, vocab=vocab).collect()[0]
-    # 'data' segments with induced pieces (≤2 tokens: 'dat'+'a' or
-    # 'da'+'ta'); 'qzx' has no induced pieces or chars → 1-char fallback
-    # hops = 3 tokens
-    assert row.n_subword_tokens <= 2 + 3
-    assert row.n_subword_tokens >= 1 + 3

@@ -1,15 +1,30 @@
-"""End-to-end crawl generation: the full declarative plan
-(SURVEY.md §3.1 step 5) on the sf0.001 frontier."""
+"""End-to-end crawl generation on the sf0.001 frontier, wired the way the
+k1_crawl_pipeline registry entry wires it: seen anti-join → robots gate →
+politeness pop → mock fetch → split, printed by the stdout sink; plus the corpus assembly registry
+entry over hand-built documents."""
 
 from __future__ import annotations
 
+import hashlib
+import io
 import json
 
 import pyspark.sql.functions as F
 
 from ganda_spark.config import EngineConfig
-from ganda_spark.plans.pipeline import crawl_generation, envelope_output
+from ganda_spark.operators.fetch import mock_fetch_udf, split_results
+from ganda_spark.operators.politeness import pop_batch, robots_gate
+from ganda_spark.operators.seen import filter_unseen_exact
+from ganda_spark.sinks import emit_stdout
 from ganda_spark.sources.frontier import seed_frontier
+
+
+def _stdout_lines(results, cfg) -> list[str]:
+    out = io.StringIO()
+    n = emit_stdout(results, cfg, out)
+    lines = out.getvalue().splitlines()
+    assert n == len(lines)
+    return lines
 
 
 def test_crawl_generation_accounting(spark, sf_dir):
@@ -20,29 +35,30 @@ def test_crawl_generation_accounting(spark, sf_dir):
         [("host-3.test", ["/order"], 0)],
         "host string, disallow_prefixes array<string>, crawl_delay_ms int",
     )
-    gen = crawl_generation(frontier, cfg, seen=seen, robots=robots)
+    unseen = filter_unseen_exact(frontier, seen)
+    allowed, blocked = robots_gate(unseen, robots)
+    released, deferred = pop_batch(allowed, cfg)
+    results, errors = split_results(mock_fetch_udf(released, cfg))
 
     n_frontier = frontier.count()
     n_seen = frontier.join(seen, "url", "left_semi").count()
-    n_blocked = gen.blocked.count()
-    n_released = gen.released.count()
-    n_deferred = gen.deferred.count()
+    n_released = released.count()
     # conservation: unseen rows either blocked, released, or deferred
-    assert n_blocked + n_released + n_deferred == n_frontier - n_seen
+    assert blocked.count() + n_released + deferred.count() == n_frontier - n_seen
     # results + errors == released
-    assert gen.results.count() + gen.errors.count() == n_released
+    assert results.count() + errors.count() == n_released
     # all robots-blocked rows are host-3
-    assert gen.blocked.where(F.col("host") != "host-3.test").count() == 0
+    assert blocked.where(F.col("host") != "host-3.test").count() == 0
 
 
 def test_envelope_output_lines(spark, sf_dir):
     frontier = seed_frontier(spark, sf_dir).limit(50)
     cfg = EngineConfig(retries=1, json_envelope=True, response_body="raw")
-    gen = crawl_generation(frontier, cfg)
-    lines = envelope_output(gen.results, cfg).orderBy("seq").collect()
-    assert len(lines) == gen.results.count()
-    for r in lines[:10]:
-        line = r["line"]
+    released, _deferred = pop_batch(frontier, cfg)
+    results, _errors = split_results(mock_fetch_udf(released, cfg))
+    lines = _stdout_lines(results, cfg)
+    assert len(lines) == results.count()
+    for line in lines[:10]:
         assert line.startswith('{ "url": "http://host-')
         # the envelope embeds the echo body (valid JSON) for 200s
         if '"code": 200' in line:
@@ -53,20 +69,16 @@ def test_envelope_output_lines(spark, sf_dir):
 
 
 def test_plain_output_parity_with_oracle(spark, sf_dir):
-    """sha256 mode plain output vs recomputing sha256 of the echo body."""
-    import hashlib
-
+    """sha256 mode plain output vs recomputing sha256 of the echo body:
+    one line per non-empty body, in seq order."""
     frontier = seed_frontier(spark, sf_dir).limit(100)
     cfg = EngineConfig(retries=1, response_body="sha256")
-    gen = crawl_generation(frontier, cfg)
-    rows = gen.results.select("seq", "body").collect()
-    expected = {
-        r["seq"]: (hashlib.sha256(r["body"].encode()).hexdigest() if r["body"] else None)
-        for r in rows
-    }
-    out = {r["seq"]: r["line"] for r in envelope_output(gen.results, cfg).collect()}
-    for seq, exp in expected.items():
-        assert out.get(seq) == exp
+    released, _deferred = pop_batch(frontier, cfg)
+    results, _errors = split_results(mock_fetch_udf(released, cfg))
+    rows = results.select("seq", "body").orderBy("seq").collect()
+    expected = [hashlib.sha256(r["body"].encode()).hexdigest() for r in rows if r["body"]]
+    assert expected
+    assert _stdout_lines(results, cfg) == expected
 
 
 def test_crawl_host_health_rollup(spark, sf_dir):
@@ -94,7 +106,6 @@ def test_corpus_build_pipeline_stages_bite(spark, tmp_path):
     short docs (quality), repeated-phrase spam (Gopher gate), exact dups
     (min-id keeper), unweighted sources (mix)."""
     import __spark_entry__ as entry
-    import pyspark.sql.functions as F
 
     rows = [
         (0, "src0", "too short"),                                  # quality gate

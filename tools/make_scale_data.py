@@ -3,13 +3,13 @@
 that scale so optimizations are validated beyond sf0.1 — guide §1/§2:
 config and plans tuned only to 600k-row tables may not hold).
 
-NOT used by any query or by bench.py; writes to a target dir (default
+NOT used by any query; writes to a target dir (default
 /tmp/sfbig). Multiplies orders/documents/embeddings by --mult with id
 offsets; later copies of documents get a distinct suffix token and later
 copies of embeddings get a deterministic per-copy perturbation so the
 scaled corpus does not become one giant duplicate blob (which would
 change the workload character, not just its size). Other tables are
-copied as-is (the bench queries only scan orders/documents/embeddings).
+copied as-is.
 
 Usage: python tools/make_scale_data.py --mult 10 --out /tmp/sfbig
 """

@@ -8,7 +8,13 @@ stdin and read the same stdout/stderr:
 Subcommand `echoserver` mirrors the reference fixture (cli/cli.go:157-206).
 
 The fetch stage is the real pooled-HTTP pandas UDF (operators/http_fetch);
-`--mock-fetch` swaps in the deterministic md5 mock for offline runs.
+`--mock-fetch` swaps in the deterministic md5 mock for offline runs. `-W`
+is the number of requests in flight, as in ganda: the fetch runs in
+min(W, slots) partitions (slots = Spark task slots, `--cores` in local
+mode, whose default is not tied to W), one wave of tasks, each with
+ceil(W / partitions) threads. Stdin is spooled to a temp file and sniffed
+there (JSON lines iff the first non-blank line starts with `{`), so no
+Spark job runs before the fetch.
 Throttle (-T) is enforced as per-second release waves — the driver-loop
 re-expression of the reference's global ticker (cli/cli.go:244-250): the
 count per window matches, not the tick phase (SURVEY.md §2.2 F5).
@@ -26,7 +32,7 @@ from pyspark.sql import functions as F
 from ganda_spark.config import EngineConfig, parse_header
 
 
-def build_parser() -> argparse.ArgumentParser:
+def build_parser(subcommands: bool = True) -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="ganda-spark",
         description="pipe-to-fetch at Spark scale (ganda-compatible surface)",
@@ -53,11 +59,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="deterministic offline fetch (no network)")
     p.add_argument("--cores", type=int, default=None, help="local[N] cores")
 
-    sub = p.add_subparsers(dest="subcommand")
-    echo = sub.add_parser("echoserver", help="JSON echo server (test fixture)")
-    echo.add_argument("-p", "--port", type=int, default=8080)
-    echo.add_argument("-d", "--delay-millis", type=int, default=0)
-    echo.add_argument("-s", "--silent", action="store_true")
+    p.set_defaults(subcommand=None)
+    if subcommands:
+        sub = p.add_subparsers(dest="subcommand")
+        echo = sub.add_parser("echoserver", help="JSON echo server (test fixture)")
+        echo.add_argument("-p", "--port", type=int, default=8080)
+        echo.add_argument("-d", "--delay-millis", type=int, default=0)
+        echo.add_argument("-s", "--silent", action="store_true")
     return p
 
 
@@ -94,7 +102,10 @@ def _config_from(args) -> EngineConfig:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    argv = sys.argv[1:] if argv is None else argv
+    # argparse hands a lone positional to the subparsers, so request_file
+    # only parses on a parser without them
+    args = build_parser(subcommands="echoserver" in argv).parse_args(argv)
     if args.subcommand == "echoserver":
         return run_echoserver(args)
 
@@ -104,17 +115,27 @@ def main(argv: list[str] | None = None) -> int:
     from ganda_spark.operators.http_fetch import http_fetch_udf
     from ganda_spark.session import get_spark
     from ganda_spark.sinks import emit_status_log, emit_stdout, write_files
-    from ganda_spark.sources.json_lines import parse_json_lines, sniff_is_json_lines
+    from ganda_spark.sources.json_lines import (
+        parse_json_lines,
+        sniff_file_is_json_lines,
+        sniff_is_json_lines,
+    )
     from ganda_spark.sources.url_lines import parse_url_lines
     from ganda_spark.functions.urls import url_host
 
-    spark = get_spark("ganda-spark-cli", cores=args.cores or max(args.workers, 2))
+    # -W is carried by fetch threads, not task slots: `-W 1000` must not
+    # start local[1000]. Without --cores, get_spark picks its own default.
+    spark = get_spark("ganda-spark-cli", cores=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # S1/S2: stdin or file (execcontext/execcontext.go:66-69)
+    # S1/S2: stdin or file (execcontext/execcontext.go:66-69). Space-only
+    # lines are dropped either way, so the same bytes give the same output
+    # whether they arrive on stdin or as request_file.
     spool_path = None
     if args.request_file:
-        lines = spark.read.text(args.request_file)
+        lines = spark.read.text(args.request_file).where(F.trim("value") != "")
+        # S3: input-type sniff (parser/parser.go:194-207)
+        is_json = sniff_is_json_lines(lines)
     else:
         # Stream stdin to a temp-file spool in bounded chunks, then read it
         # through the same distributed S2 path — the reference streams
@@ -130,26 +151,27 @@ def main(argv: list[str] | None = None) -> int:
         with fd:
             shutil.copyfileobj(sys.stdin.buffer, fd, length=1 << 20)
             spool_path = fd.name
-        if os.path.getsize(spool_path) == 0:
-            # P2: empty input ⇒ clean no-op (parser/parser.go:38-40)
+        # S3 (parser/parser.go:194-207) on the spool the driver just
+        # wrote, so no Spark job runs before the fetch
+        is_json = sniff_file_is_json_lines(spool_path)
+        if is_json is None:
+            # P2: empty or whitespace-only input ⇒ clean no-op
+            # (parser/parser.go:38-40)
             os.unlink(spool_path)
             spark.stop()
             return 0
         lines = spark.read.text(spool_path).where(F.trim("value") != "")
-        if lines.isEmpty():  # whitespace-only pipe is still a no-op
-            os.unlink(spool_path)
-            spark.stop()
-            return 0
 
-    # S3: input-type sniff (parser/parser.go:194-207)
-    if sniff_is_json_lines(lines):
+    if is_json:
         reqs = parse_json_lines(lines, cfg)
     else:
         reqs = parse_url_lines(spark, lines)
     reqs = reqs.withColumn("host", url_host(F.col("url")))
 
     fetcher = mock_fetch_udf if args.mock_fetch else http_fetch_udf
-    parts = max(1, cfg.request_workers)
+    # one fetch task per slot that runs at once; http_fetch gives each
+    # ceil(W / tasks) threads, so W requests are in flight in one wave
+    parts = max(1, min(cfg.request_workers, spark.sparkContext.defaultParallelism))
 
     def fetch_and_emit(batch_df) -> None:
         # cache the WHOLE fetch result: ok/status splits must come from one

@@ -184,7 +184,9 @@ def mock_fetch_udf(
 ) -> DataFrame:
     """F1: iterator-style pandas_udf with a per-task MockSession (the
     per-goroutine pooled client, requests/requests.go:66). Output schema =
-    input + fetch columns, identical to mock_fetch_plan.
+    input + fetch columns, identical to mock_fetch_plan; a request `body`
+    column (JSON-lines input) is renamed to request_body, as
+    http_fetch_udf does, so `body` is the response.
 
     Design notes (scale):
       * SCALAR_ITER pandas_udf, not mapInPandas — ONLY url+host cross the
@@ -216,10 +218,12 @@ def mock_fetch_udf(
     fetch = fetch.asNondeterministic()
 
     src = frontier
+    if "body" in src.columns:  # request body — free the name for the response
+        src = src.withColumnRenamed("body", "request_body")
     if repartition:
         src = src.repartition(max(1, cfg.request_workers))
     fetched = src.withColumn("_r", fetch(F.col("url"), F.col("host")))
-    return fetched.select(*[f.name for f in frontier.schema], "_r.*")
+    return fetched.select(*[f.name for f in src.schema], "_r.*")
 
 
 def split_results(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:

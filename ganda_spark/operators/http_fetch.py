@@ -4,11 +4,16 @@ Same contract as operators/fetch.py's mock (identical output schema and
 retry rule table, requests/requests.go:83-124), with the reference
 transport's model re-expressed per Spark task:
 
-  * W concurrent in-flight requests — a per-task ThreadPoolExecutor sized
-    ceil(request_workers / partitions), so TOTAL concurrency ≈ ganda's -W
-    goroutines (requests/requests.go:41-58) regardless of partition count.
-    Latency-bound crawls (1 s pages) no longer need 1000 tasks to match
-    `-W 1000`.
+  * W concurrent in-flight requests — ganda's -W goroutines
+    (requests/requests.go:41-58). Only the tasks that run at once carry
+    requests, so each task's ThreadPoolExecutor is sized from
+    T = min(P, slots), where P is the input's planned partition count and
+    slots the cluster's task slots (defaultParallelism). Requests in
+    flight = T × ceil(W / T) (given enough rows per task): exactly W when
+    T divides W, as for `-W 16` on 4 slots, and fewer than T over W
+    otherwise. Latency-bound crawls (1 s pages) do not need 1000 tasks to
+    match `-W 1000`. P is read from the physical plan, so building the
+    fetch submits no Spark job.
   * pooled keep-alive connections with a per-host cap of 50
     (requests/requests.go:21-39, MaxConnsPerHost :29) — a bounded LIFO pool
     per host; a thread blocks when the host's 50 connections are all busy
@@ -358,13 +363,25 @@ class HttpSession:
         return status, text, cfg.retries + 1, err, int((time.monotonic() - t0) * 1000)
 
 
-def threads_per_task(cfg: EngineConfig, n_partitions: int) -> int:
+def threads_per_task(cfg: EngineConfig, concurrent_tasks: int) -> int:
     """ganda's -W is TOTAL in-flight requests; Spark's unit of placement is
-    the task, so each task runs ceil(W / partitions) threads (bounded)."""
+    the task, so each of the tasks that run at once gets ceil(W / tasks)
+    threads (bounded)."""
     return max(1, min(
         MAX_THREADS_PER_TASK,
-        math.ceil(cfg.request_workers / max(1, n_partitions)),
+        math.ceil(cfg.request_workers / max(1, concurrent_tasks)),
     ))
+
+
+def concurrent_fetch_tasks(df: DataFrame) -> int:
+    """Fetch tasks that run at once over `df`: min(P, slots), with P the
+    partition count of `df`'s physical plan (0 = unknown, e.g. a bare
+    scan, read as slots). P is read from the planner, never from `df.rdd`:
+    under AQE `.rdd` runs the input's shuffle stages as a Spark job of
+    their own before the fetch starts."""
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    planned = df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+    return min(planned or slots, slots)
 
 
 def http_fetch_udf(frontier: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -377,7 +394,8 @@ def http_fetch_udf(frontier: DataFrame, cfg: EngineConfig) -> DataFrame:
     `body` column is renamed to request_body and transmitted. The response
     body takes the `body` output column (envelope semantics downstream).
 
-    Concurrency: a per-task ThreadPoolExecutor (threads_per_task) over a
+    Concurrency: a per-task ThreadPoolExecutor of
+    threads_per_task(cfg, concurrent_fetch_tasks(input)) threads over a
     per-host-capped connection pool — results stay in row order
     (executor.map), so the W=1 ordering contract is untouched.
     """
@@ -404,7 +422,7 @@ def http_fetch_udf(frontier: DataFrame, cfg: EngineConfig) -> DataFrame:
         else F.lit(None).cast("string")
     )
 
-    n_threads = threads_per_task(cfg, src.rdd.getNumPartitions())
+    n_threads = threads_per_task(cfg, concurrent_fetch_tasks(src))
 
     @pandas_udf(RESULT_SCHEMA)
     def fetch(

@@ -94,9 +94,12 @@ def pop_batch(
         # and repartitionByRange with ~1M partitions is itself a
         # scheduler/boundary-sampling hazard (ADVICE r2). 16× the cluster's
         # default parallelism is plenty for rank skew at any -W.
+        # Sized from the config and the slots, not from the frontier's
+        # RDD: under AQE asking `.rdd` for its partition count runs the
+        # frontier's shuffle stages as an extra job every generation.
         default_par = frontier.sparkSession.sparkContext.defaultParallelism
         parts = min(
-            max(cfg.request_workers, frontier.rdd.getNumPartitions()),
+            max(cfg.request_workers, default_par),
             max(default_par * 16, 64),
         )
         capped, rank_cache = with_global_rank(
@@ -119,10 +122,10 @@ def partition_for_fetch(released: DataFrame, cfg: EngineConfig) -> DataFrame:
     Partition count is request_workers CAPPED at 16× cluster parallelism
     (same hazard as the rank site above: -W may be 2^20 and a ~1M-partition
     repartitionByRange is a scheduler/boundary-sampling hazard).
-    threads_per_task (http_fetch.py) compensates by sizing each task's
-    pool as ceil(request_workers / partitions), itself bounded by
-    MAX_THREADS_PER_TASK — so effective total concurrency is
-    min(-W, partitions × MAX_THREADS_PER_TASK). An extreme -W beyond that
+    http_fetch sizes each task's pool from the tasks that run at once,
+    T = min(partitions, slots): ceil(request_workers / T) threads, bounded
+    by MAX_THREADS_PER_TASK — so effective total concurrency is
+    min(T × ceil(-W / T), T × MAX_THREADS_PER_TASK). An extreme -W beyond that
     product is treated as "as much concurrency as this cluster can give",
     matching the reference's behavior of -W being an upper bound, not a
     guarantee (its transport also caps idle conns per host)."""

@@ -171,3 +171,25 @@ def sniff_is_json_lines(lines: DataFrame) -> bool:
     """S3 — first byte '{' ⇒ JSON lines (parser/parser.go:194-207)."""
     first = lines.select("value").limit(1).collect()
     return bool(first) and (first[0][0] or "")[:1] == "{"
+
+
+def sniff_file_is_json_lines(path: str, chunk_bytes: int = 1 << 16) -> bool | None:
+    r"""S3 on a local file without a Spark job: the answer sniff_is_json_lines
+    gives for `spark.read.text(path).where(trim(value) != '')`, or None when
+    that DataFrame is empty (no non-blank line).
+
+    Same semantics as that Spark path: lines end at \n, \r\n or \r; a
+    line is blank when it holds only spaces (Spark's trim strips spaces,
+    not tabs); the first non-blank line's first character is tested
+    unstripped. So the first byte that is not a space or a line end decides:
+    JSON lines iff it is '{' and it starts its line."""
+    prev = b"\n"
+    with open(path, "rb") as f:
+        while chunk := f.read(chunk_bytes):
+            rest = chunk.lstrip(b" \r\n")
+            if rest:
+                i = len(chunk) - len(rest)
+                before = chunk[i - 1:i] if i else prev
+                return rest[:1] == b"{" and before in (b"\r", b"\n")
+            prev = chunk[-1:]
+    return None

@@ -156,6 +156,15 @@ def test_reference_flag_surface_parses_verbatim():
     assert (e.port, e.delay_millis, e.silent) == (9999, 50, True)
 
 
+def test_request_file_positional_parses():
+    """`ganda-spark urls.txt` reads the file (execcontext/execcontext.go:
+    66-69); the echoserver subcommand must not swallow it."""
+    from ganda_spark.cli import build_parser
+
+    args = build_parser(subcommands=False).parse_args(["urls.txt", "-W", "2"])
+    assert (args.request_file, args.workers, args.subcommand) == ("urls.txt", 2, None)
+
+
 def test_cli_empty_input_is_clean_noop():
     code, out, err = run_cli(["-s"], "")
     assert (code, out, err) == (0, "", "")
@@ -206,3 +215,103 @@ def test_cli_mock_fetch_offline():
     )
     assert code == 0
     assert out.startswith('{ "url": "http://host-1.test/order/1", "code": ')
+
+
+def test_cli_mock_fetch_json_lines_request_body():
+    """A JSON-lines request `body` must not collide with the mock fetch's
+    response `body` (AMBIGUOUS_REFERENCE): both fetchers rename it to
+    request_body."""
+    code, out, err = run_cli(
+        ["--mock-fetch", "-J", "-s", "--cores", "2"],
+        '{"url":"http://example.invalid/a","body":"x"}\n',
+    )
+    assert code == 0, err
+    envelope = json.loads(out)
+    assert envelope["url"] == "http://example.invalid/a"
+    assert envelope["code"] == 200 and envelope["body"]["uri"] == "/a"
+
+
+def test_cli_leaves_core_count_to_get_spark(monkeypatch):
+    """-W is carried by fetch threads: without --cores the CLI must not
+    start local[W] (`-W 1000` would ask for 1000 task slots)."""
+    import ganda_spark.session as session
+    from ganda_spark.cli import main
+
+    class Started(Exception):
+        pass
+
+    asked = []
+
+    def fake_get_spark(app_name="ganda-spark", cores=None, **kwargs):
+        asked.append(cores)
+        raise Started
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    for argv in (["-W", "1000"], ["-W", "1000", "--cores", "3"]):
+        with pytest.raises(Started):
+            main(["-s", "--mock-fetch", *argv])
+    assert asked == [None, 3]
+
+
+_SNIFF_DRIVER = """
+import io, json, os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from ganda_spark.cli import main
+cases = json.loads(sys.argv[1])
+args = ["-s", "-J", "-B", "sha256", "--mock-fetch", "--cores", "1"]
+for i, text in enumerate(cases):
+    data = text.encode("latin-1")
+    with tempfile.NamedTemporaryFile("wb", suffix=".txt", delete=False) as f:
+        f.write(data)
+    for mode in ("stdin", "file"):
+        sys.stdin = io.TextIOWrapper(io.BytesIO(data))
+        print("@@", i, mode, flush=True)
+        rc = main(([f.name] if mode == "file" else []) + args)
+        sys.stdout.flush()
+        print("@@rc", rc, flush=True)
+    os.unlink(f.name)
+"""
+
+
+def test_stdin_spool_sniff_matches_request_file(tmp_path):
+    """The stdin spool is sniffed in the driver, not by a Spark job; the
+    same bytes as request_file (sniffed by Spark) must choose the same
+    parser and print the same stdout, for first lines that are space-only,
+    tab-only, CRLF-terminated, `" {…"` or `{…}`."""
+    jl = '{"url": "http://h%d.test/j/%d", "context": ["c%d"]}'
+    ul = "http://h%d.test/u/%d\tc%d"
+    body = lambda fmt, eol="\n": "".join(fmt % (i % 3, i, i) + eol for i in range(4))
+    cases = [
+        "   \n" + body(jl),
+        "\t\n" + body(ul),
+        "\r\n  \r\n" + body(jl, "\r\n"),
+        ' {"url": "http://h.test/x"}\n' + body(ul),
+        body(jl),
+        "  \n\r\n",
+    ]
+    script = tmp_path / "sniff_driver.py"
+    script.write_text(_SNIFF_DRIVER.format(repo=REPO))
+    proc = subprocess.run(
+        [sys.executable, str(script), json.dumps(cases)],
+        capture_output=True, text=True, cwd=str(tmp_path), timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    runs, key = {}, None
+    for line in proc.stdout.splitlines():
+        if line.startswith("@@rc "):
+            runs[key].append("rc=" + line.split()[1])
+        elif line.startswith("@@ "):
+            key = tuple(line.split()[1:])
+            runs[key] = []
+        else:
+            runs[key].append(line)
+    for i in range(len(cases)):
+        assert runs[(str(i), "stdin")] == runs[(str(i), "file")], cases[i]
+    # the parser choice shows in the envelopes: a JSON line read as a URL
+    # line is an invalid URL and fails the run
+    for i, kind in ((0, "j"), (1, "u"), (2, "j"), (4, "j")):
+        first = json.loads(runs[(str(i), "stdin")][0])
+        assert (first["url"], first["context"]) == (f"http://h0.test/{kind}/0", ["c0"])
+        assert runs[(str(i), "stdin")][-1] == "rc=0"
+    assert runs[("3", "stdin")] == ["rc=1"]  # " {…" is a URL line
+    assert runs[("5", "stdin")] == ["rc=0"]  # blank input is a no-op

@@ -7,13 +7,19 @@ retry-on-5xx (:51-74), retry exhaustion (:76-96), no-retry-4xx (:98-115).
 from __future__ import annotations
 
 import json
+import time
 
 import pyspark.sql.functions as F
 import pytest
 
 from ganda_spark.config import EngineConfig
 from ganda_spark.echoserver import Echoserver
-from ganda_spark.operators.http_fetch import HttpSession, http_fetch_udf
+from ganda_spark.operators.http_fetch import (
+    HttpSession,
+    concurrent_fetch_tasks,
+    http_fetch_udf,
+    threads_per_task,
+)
 
 
 @pytest.fixture(scope="module")
@@ -319,3 +325,93 @@ def test_per_line_method_and_body(spark, echo):
         assert echo_body["method"] == "POST" and echo_body["request_body"] == "hi"
     finally:
         s.close()
+
+
+class _PeakServer:
+    """Threaded HTTP/1.1 origin that holds every request `delay_s` and
+    records the peak number of requests it held at once."""
+
+    def __init__(self, delay_s: float = 0.2):
+        import threading
+        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+        peak = self
+
+        class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"
+
+            def do_GET(self):
+                with peak.lock:
+                    peak.inflight += 1
+                    peak.peak = max(peak.peak, peak.inflight)
+                time.sleep(delay_s)
+                with peak.lock:
+                    peak.inflight -= 1
+                self.send_response(200)
+                self.send_header("Content-Length", "2")
+                self.end_headers()
+                self.wfile.write(b"ok")
+
+            def log_message(self, *args):
+                pass
+
+        self.lock = threading.Lock()
+        self.inflight = self.peak = 0
+        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.httpd.daemon_threads = True
+        self.thread = threading.Thread(target=self.httpd.serve_forever, daemon=True)
+
+    def __enter__(self):
+        self.thread.start()
+        return self
+
+    def __exit__(self, *exc):
+        self.httpd.shutdown()
+        self.httpd.server_close()
+
+    def url_for(self, path: str) -> str:
+        return f"http://127.0.0.1:{self.httpd.server_address[1]}/{path}"
+
+
+@pytest.mark.parametrize("partitions", [16, 1])
+def test_inflight_peak_equals_workers(spark, partitions):
+    """-W is the number of requests in flight (ganda's W goroutines,
+    requests/requests.go:41-58). With W=16 over 16 partitions, only `slots`
+    tasks run at once, so each must carry ceil(16 / slots) threads; sizing
+    threads from the partition count alone left 16 one-thread tasks, and
+    the origin never saw more than `slots` requests at once."""
+    slots = spark.sparkContext.defaultParallelism
+    tasks = min(partitions, slots)
+    want = tasks * threads_per_task(EngineConfig(request_workers=16), tasks)
+    if 16 % slots == 0:  # the local[4] / local[8] fixture
+        assert want == 16
+    with _PeakServer(delay_s=0.2) as origin:
+        df = spark.createDataFrame(
+            [(i, origin.url_for(f"p/{i}"), "127.0.0.1") for i in range(128)],
+            "seq long, url string, host string",
+        ).repartition(partitions).cache()
+        df.count()
+        cfg = EngineConfig(retries=0, request_workers=16)
+        assert http_fetch_udf(df, cfg).where(F.col("status") == 200).count() == 128
+        assert origin.peak == want
+
+
+def test_building_fetch_submits_no_spark_job(spark):
+    """The thread count comes from the planned partition count, read from
+    the physical plan: building the fetch over a shuffled input runs no
+    job (asking `.rdd` for it under AQE runs the shuffle as a job)."""
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.range(64).selectExpr(
+        "id AS seq", "concat('http://127.0.0.1:9/', id) AS url", "'127.0.0.1' AS host"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("fetch-build", "building http_fetch_udf")
+    try:
+        http_fetch_udf(df.repartition(16), EngineConfig(request_workers=16))
+        assert list(sc.statusTracker().getJobIdsForGroup("fetch-build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert concurrent_fetch_tasks(df.repartition(16)) == min(16, slots)
+    assert concurrent_fetch_tasks(df.repartition(1)) == 1
+    assert concurrent_fetch_tasks(spark.read.text(__file__)) == slots  # unknown

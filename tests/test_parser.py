@@ -11,6 +11,7 @@ from ganda_spark.config import EngineConfig
 from ganda_spark.sources.json_lines import (
     decode_body,
     parse_json_lines,
+    sniff_file_is_json_lines,
     sniff_is_json_lines,
 )
 from ganda_spark.sources.url_lines import parse_url_lines
@@ -255,3 +256,33 @@ def test_input_sniff(spark):
     # S3: first byte '{' ⇒ JSON lines (parser/parser.go:194-207)
     assert sniff_is_json_lines(_lines_df(spark, ['{"url": "x"}']))
     assert not sniff_is_json_lines(_lines_df(spark, ["http://a.test/1"]))
+
+
+# first lines that decide the sniff: blank per Spark's trim (spaces only),
+# tab-only (not blank), each line end, a '{' after a space (not JSON)
+SNIFF_CASES = [
+    b'{"url": "x"}\n',
+    b"http://a.test/1\n",
+    b'   \n{"url": "x"}\n',
+    b'\t\n{"url": "x"}\n',
+    b'\r\n  \r\n{"url": "x"}\r\n',
+    b'  \r{"url": "x"}\r',
+    b'\n\n {"url": "x"}\n',
+    b'   {"url": "x"}',
+    b"  \n\r\n \r",
+    b"\x00{\n",
+    b"",
+]
+
+
+@pytest.mark.parametrize("data", SNIFF_CASES, ids=repr)
+def test_file_sniff_matches_spark_sniff(spark, tmp_path, data):
+    """The CLI sniffs its stdin spool file in the driver; that must give
+    the Spark path's answer over the same bytes (None = no non-blank line),
+    whatever the read chunk size."""
+    path = tmp_path / "in.txt"
+    path.write_bytes(data)
+    lines = spark.read.text(str(path)).where(F.trim("value") != "")
+    want = None if lines.isEmpty() else sniff_is_json_lines(lines)
+    for chunk_bytes in (1, 2, 3, 1 << 16):
+        assert sniff_file_is_json_lines(str(path), chunk_bytes) == want

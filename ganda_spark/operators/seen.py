@@ -136,7 +136,11 @@ def build_bloom_tree(
 
 
 def filter_unseen_hybrid(
-    frontier: DataFrame, seen_urls: DataFrame, prefilter
+    frontier: DataFrame,
+    seen_urls: DataFrame,
+    prefilter,
+    *,
+    cache_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The 10^10-scale composition (PLANS.md f10 row): the broadcast
     prefilter (BloomFilter or CuckooFilter — anything with a vectorized
@@ -150,10 +154,13 @@ def filter_unseen_hybrid(
         the false positives exactly.
 
     Equal to filter_unseen_exact by construction — the exact join sees
-    every row the prefilter could possibly be wrong about. The two branches
-    re-run the (map-only, deterministic) tag pass once each; at scale two
-    scans are far cheaper than shuffling the full frontier, and loop
-    callers read the frontier from committed parquet anyway."""
+    every row the prefilter could possibly be wrong about.
+
+    cache_out: without it the two branches re-run the (map-only,
+    deterministic) tag pass once each. With it the tagged frame is
+    persisted and its handle appended, so the Python pass runs once; the
+    CALLER unpersists the handle after materializing the result (the
+    frontier loop does this after each generation commits)."""
     spark = frontier.sparkSession
     bc = spark.sparkContext.broadcast(prefilter)
     with_h = frontier.withColumn("url_h", url_hash64(F.col("url")))
@@ -175,6 +182,9 @@ def filter_unseen_hybrid(
             yield pdf.assign(_maybe_seen=flag)
 
     tagged = with_h.mapInPandas(tag, out_schema)
+    if cache_out is not None:
+        tagged = tagged.persist()
+        cache_out.append(tagged)
     sure_unseen = tagged.where(~F.col("_maybe_seen")).drop("url_h", "_maybe_seen")
     maybe = tagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
     seen_keys = seen_urls.select(url_hash64(F.col("url")).alias("url_h")).distinct()

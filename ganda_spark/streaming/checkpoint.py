@@ -3,9 +3,18 @@
 Production target is Iceberg (MERGE INTO the seen set, snapshot per
 generation); the sandbox has no Iceberg runtime jar, so the same contract is
 implemented over parquet snapshot directories with an atomically-renamed
-manifest — commit protocol: write data → write manifest.json → rename to
-committed marker. Resume = highest committed generation. The public API is
-backend-agnostic so an Iceberg backend slots in unchanged.
+manifest. Commit protocol, in order:
+
+  1. write-ahead table — a crawl generation's fetch output, written once
+     (`write_ahead`) before anything else; every other table of the
+     generation derives from its scan, so no later step re-runs the fetch;
+  2. the generation's tables (`commit`);
+  3. manifest.json, renamed into place — the commit point.
+
+A crash anywhere before step 3 leaves an uncommitted directory that resume
+ignores; rerunning the generation overwrites its stale tables. Resume =
+highest committed generation. The public API is backend-agnostic so an
+Iceberg backend slots in unchanged.
 
 Per-partition lineage (batch_id, partition_id) rides on every committed
 DataFrame via spark_partition_id() — the north rule's lineage requirement.
@@ -20,6 +29,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# the write-ahead table's name inside a generation directory
+WRITE_AHEAD = "fetched"
 
 
 @dataclass
@@ -41,11 +53,31 @@ class CheckpointStore:
         # that CAN change a generation (crash-recommit replay) stays
         # consistent.
         self._snapshot_cache: dict[int, Snapshot] = {}
+        # generations whose write-ahead table is written but not yet
+        # committed; the manifest lists it with the committed tables
+        self._ahead: set[int] = set()
 
     # -- commit protocol ----------------------------------------------------
 
     def _gen_dir(self, gen: int) -> str:
         return os.path.join(self.root, f"gen={gen:06d}")
+
+    def _write(self, gen: int, name: str, df: DataFrame) -> None:
+        out = df.withColumn("_batch_id", F.lit(gen)).withColumn(
+            "_partition_id", F.spark_partition_id()
+        )
+        out.write.mode("overwrite").parquet(os.path.join(self._gen_dir(gen), name))
+
+    def write_ahead(self, gen: int, df: DataFrame) -> DataFrame:
+        """Write `df` (with lineage columns) as generation `gen`'s
+        WRITE_AHEAD table, ahead of its other tables and manifest, and
+        return the durable scan of it. Readers of the scan never re-run
+        `df`'s plan, so a nondeterministic stage in it (a live fetch) runs
+        once. An earlier, uncommitted attempt at the same generation is
+        overwritten."""
+        self._write(gen, WRITE_AHEAD, df)
+        self._ahead.add(gen)
+        return self.read(df.sparkSession, gen, WRITE_AHEAD)
 
     def commit(self, gen: int, tables: dict[str, DataFrame], metrics: dict) -> Snapshot:
         """Write each DataFrame (with lineage columns) + manifest; the
@@ -53,16 +85,15 @@ class CheckpointStore:
         uncommitted (ignored) directory, after it a complete snapshot."""
         gen_dir = self._gen_dir(gen)
         os.makedirs(gen_dir, exist_ok=True)  # table writes create it too,
-        counts = {}                          # but commit({}) is legal
-        for name, df in tables.items():
-            out = df.withColumn("_batch_id", F.lit(gen)).withColumn(
-                "_partition_id", F.spark_partition_id()
-            )
-            out.write.mode("overwrite").parquet(os.path.join(gen_dir, name))
-            counts[name] = None  # filled from metrics to avoid extra jobs
+        for name, df in tables.items():      # but commit({}) is legal
+            self._write(gen, name, df)
+        names = set(tables)
+        if gen in self._ahead:
+            self._ahead.discard(gen)
+            names.add(WRITE_AHEAD)
         manifest = {
             "generation": gen,
-            "tables": sorted(tables),
+            "tables": sorted(names),
             "metrics": metrics,
             "committed_at_unix": int(time.time()),
         }

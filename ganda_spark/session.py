@@ -54,6 +54,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # ...and inside persisted plans too. Off (Spark's default), every
+        # stage reading a cached frame (the prefilter tag pass, the pop, the
+        # global-rank intermediate) keeps shuffle.partitions tasks even over
+        # a few thousand rows. Explicit repartition(n)/repartitionByRange(n)
+        # are never coalesced, so fetch placement, -W thread sizing and the
+        # global rank's range boundaries keep their partition counts.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for every pandas UDF / mapInPandas boundary (no per-row Python).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")

@@ -18,6 +18,14 @@ Iceberg backend slots in unchanged.
 
 Per-partition lineage (batch_id, partition_id) rides on every committed
 DataFrame via spark_partition_id() — the north rule's lineage requirement.
+
+Schema memo: the store remembers each table's schema by (gen, table) when
+it writes it, and `read`/`read_lineage` hand that schema to the reader, so
+a read-back plans without Spark's parquet schema-inference job (one job
+per read; a delta generation reads 6-7 tables back). A table this store did not
+write — a resumed run's earlier generations — is inferred on its first
+read and memoized from then on. The memo is per process; the files stay
+the source of truth.
 """
 
 from __future__ import annotations
@@ -29,6 +37,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # the write-ahead table's name inside a generation directory
 WRITE_AHEAD = "fetched"
@@ -56,6 +65,9 @@ class CheckpointStore:
         # generations whose write-ahead table is written but not yet
         # committed; the manifest lists it with the committed tables
         self._ahead: set[int] = set()
+        # (gen, table) -> schema as written (with lineage columns); see the
+        # module docstring
+        self._schemas: dict[tuple[int, str], StructType] = {}
 
     # -- commit protocol ----------------------------------------------------
 
@@ -67,6 +79,8 @@ class CheckpointStore:
             "_partition_id", F.spark_partition_id()
         )
         out.write.mode("overwrite").parquet(os.path.join(self._gen_dir(gen), name))
+        # the reader makes a given schema nullable, as inference would
+        self._schemas[(gen, name)] = out.schema
 
     def write_ahead(self, gen: int, df: DataFrame) -> DataFrame:
         """Write `df` (with lineage columns) as generation `gen`'s
@@ -135,12 +149,15 @@ class CheckpointStore:
         return snap
 
     def read(self, spark: SparkSession, gen: int, table: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._gen_dir(gen), table)).drop(
-            "_batch_id", "_partition_id"
-        )
+        return self.read_lineage(spark, gen, table).drop("_batch_id", "_partition_id")
 
     def read_lineage(self, spark: SparkSession, gen: int, table: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._gen_dir(gen), table))
+        schema = self._schemas.get((gen, table))
+        # no schema: a table not written here, inferred once and memoized
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(os.path.join(self._gen_dir(gen), table))
+        self._schemas[(gen, table)] = df.schema
+        return df
 
     def partition_metrics(self, spark: SparkSession, gen: int) -> DataFrame:
         """Per-partition row metrics over a committed snapshot (the north

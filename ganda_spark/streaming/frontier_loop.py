@@ -445,7 +445,6 @@ class CrawlDriver:
             ),
         )
         results, errors = split_results(fetched)
-        results_all = results
         newly_content = None
         if self.content_dedup:
             # mirror detection: one md5 projection over the write-ahead
@@ -520,17 +519,19 @@ class CrawlDriver:
             held.select(*redeliver.columns)
         ).unionByName(gen_adds)
 
-        # seen = fetched OK ∪ permanently failed. NOT the redelivered rows —
-        # they must survive the next generation's anti-join.
+        # seen = fetched OK ∪ permanently failed, as one filter over one
+        # scan of the write-ahead table. NOT the redelivered rows — they
+        # must survive the next generation's anti-join.
         # Scale shape: distinct() ONLY the generation's new URLs (they may
         # repeat within a generation), never the accumulated seen set — the
         # released rows passed the anti-join, so new ∩ seen = ∅ by
         # construction and the union needs no re-shuffle of 10^10 old rows.
-        perma_failed = errors.where(F.col("attempt") + 1 > self.max_redelivery)
         # URL-level seen uses ALL fetched results — a mirror's URL is
         # still seen (fetched once, never again) even though its content
         # row was dropped
-        seen_urls = results_all.select("url").unionByName(perma_failed.select("url"))
+        seen_urls = fetched.where(
+            ok | (F.col("attempt") + 1 > self.max_redelivery)
+        ).select("url")
         newly_seen = seen_urls.distinct()
         next_seen = seen.unionByName(newly_seen)
 
@@ -544,7 +545,7 @@ class CrawlDriver:
 
         n_eligible = _obs_or(obs_eligible, "n", eligible)
         n_unseen = _obs_or(obs_unseen, "n", unseen)
-        n_fetched_ok = _obs_or(obs_fetch, "results", results_all)
+        n_fetched_ok = _obs_or(obs_fetch, "results", fetched.where(ok))
         # content_dedup's deduped results are the one direct count: the
         # keeper window and anti-join run after the write-ahead write
         n_results = results.count() if self.content_dedup else n_fetched_ok
@@ -634,9 +635,9 @@ class CrawlDriver:
         committed_seen = self._read_seen(gen)
         if self.seen_strategy == "hybrid":
             # grow the bloom by THIS generation's newly-seen urls only — a
-            # treeAggregate over the write-ahead scan, never a rescan of
-            # the accumulated seen table. No distinct(): setting a bloom
-            # bit twice is a no-op
+            # treeAggregate over one filtered scan of the write-ahead
+            # table, never a rescan of the accumulated seen table. No
+            # distinct(): setting a bloom bit twice is a no-op
             from ganda_spark.operators.seen import build_bloom_tree
 
             delta = build_bloom_tree(
@@ -645,9 +646,10 @@ class CrawlDriver:
             )
             self._bloom = self._bloom.union(delta)
         elif self.seen_strategy == "cuckoo":
-            # same delta-only discipline, but distinct: each insert of a
-            # hash takes its own slot. Fingerprint re-insertion merge
-            # spills to the overflow set rather than ever dropping a member
+            # same delta-only discipline and single scan, but distinct:
+            # each insert of a hash takes its own slot. Fingerprint
+            # re-insertion merge spills to the overflow set rather than
+            # ever dropping a member
             from ganda_spark.operators.cuckoo import build_cuckoo
 
             delta = build_cuckoo(

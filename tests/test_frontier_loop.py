@@ -214,6 +214,79 @@ def test_committed_tables_never_read_the_live_fetch(spark, sf_dir, ckpt):
     assert all(WRITE_AHEAD in store.snapshot(g).manifest["tables"] for g in (0, 1, 2))
 
 
+def test_read_back_runs_no_spark_job(spark, sf_dir, ckpt):
+    """The store remembers the schema of every table it writes, so the
+    generation's read-back (delta reconstruction: base ∪ adds − removes)
+    plans without a parquet schema-inference job. A fresh store — the
+    resume path — infers the schemas instead and reads the same rows."""
+    cfg = EngineConfig(retries=0, request_workers=4, per_host_budget=5)
+    kw = dict(checkpoint_mode="delta", compact_every=4, max_redelivery=1)
+    driver = CrawlDriver(spark, cfg, ckpt, **kw)
+    gen, frontier, seen = driver.load_state(_seed(spark, sf_dir, 200))
+    for g in range(2):
+        frontier, seen, _ = driver.run_generation(g, frontier, seen)
+    assert "frontier_adds" in driver.store.snapshot(1).manifest["tables"]
+
+    sc = spark.sparkContext
+    group = f"read-back-{id(driver)}"
+    sc.setJobGroup(group, "checkpoint read-back")
+    try:
+        warm = driver._read_frontier(1), driver._read_seen(1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    resumed = CrawlDriver(spark, cfg, ckpt, **kw)
+    cold = resumed._read_frontier(1), resumed._read_seen(1)
+    for a, b in zip(warm, cold):
+        assert a.schema == b.schema
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_bloom_grow_reads_write_ahead_once(spark, sf_dir, ckpt, monkeypatch):
+    """The hybrid prefilter grows from ONE filtered scan of the
+    write-ahead table (fetched OK or permanently failed), not a union of
+    two scans, and its URLs are exactly the generation's results ∪
+    permanently-failed errors — redelivered errors stay out of it."""
+    from ganda_spark.operators import seen as seen_mod
+
+    grown: list = []
+    build = seen_mod.build_bloom_tree
+
+    def capturing_build(df, **kw):
+        grown.append(df)
+        return build(df, **kw)
+
+    monkeypatch.setattr(seen_mod, "build_bloom_tree", capturing_build)
+    cfg = EngineConfig(retries=0, request_workers=4, per_host_budget=1000)
+    driver = CrawlDriver(
+        spark, cfg, ckpt, seen_strategy="hybrid", max_redelivery=1
+    )
+    gen, frontier, seen = driver.load_state(_seed(spark, sf_dir, 300))
+    for g in range(3):  # gen 0's errors come back, attempt 1, at gen 2
+        frontier, seen, _ = driver.run_generation(g, frontier, seen)
+    assert len(grown) == 3
+
+    store = driver.store
+    n_perma = 0
+    for g, df in enumerate(grown):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1, plan
+        errors = store.read(spark, g, "errors")
+        perma = errors.where(F.col("attempt") + 1 > 1)
+        n_perma += perma.count()
+        want = store.read(spark, g, "results").select("url").unionByName(
+            perma.select("url")
+        )
+        got = {r.url for r in df.collect()}
+        assert got == {r.url for r in want.collect()}
+        assert len(got) == want.count()
+    assert n_perma > 0, "no permanently failed row reached the grow"
+    # gen 0's errors were redelivered: rows the grow had to leave out
+    assert store.read(spark, 0, "errors").count() > 0
+
+
 @pytest.mark.parametrize("mode", ["full", "delta"])
 def test_crash_between_write_ahead_and_manifest(spark, sf_dir, tmp_path, mode):
     """A crash after generation 1's write-ahead fetch table and before its
